@@ -56,13 +56,19 @@ def main() -> None:
     # data-independent). The timed runs below then measure the
     # data-proportional work — the quantity that extrapolates to
     # cluster scale — not one-time JIT cost that is identical at any SF.
+    # A warm-up failure does not stop the bench (the timed run of that
+    # query fails loudly on its own), but it is reported: on stderr and
+    # in the sidecar's ``warmup_failed`` (query name -> "Type: message").
+    warmup_failed: dict[str, str] = {}
     if os.path.isdir(WARM_SF_DIR):
         for name in names:
             try:
                 QUERIES[name].fn(spark, WARM_SF_DIR) \
                     .write.format("noop").mode("overwrite").save()
-            except Exception:
-                pass
+            except Exception as exc:
+                warmup_failed[name] = f"{type(exc).__name__}: {exc}"
+                print(f"warm-up failed: {name}: {warmup_failed[name]}",
+                      file=sys.stderr)
     else:
         spark.read.parquet(f"{SF_DIR}/region.parquet").count()
     spark.catalog.clearCache()
@@ -164,7 +170,8 @@ def main() -> None:
         "n_queries": len(timings),
         "release_blocks": RELEASE_BLOCKS,
     }
-    detail = {**summary, "queries_median": medians,
+    detail = {**summary, "warmup_failed": warmup_failed,
+              "queries_median": medians,
               "queries_t_offset": offsets,
               "calib_runs": [round(r, 3) for r in calib_runs],
               "calib_par_runs": [round(r, 3) for r in calib_par_runs]}

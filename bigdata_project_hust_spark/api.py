@@ -1142,8 +1142,8 @@ class Engine:
 
     def near_dups_prefix_filtered(self) -> DataFrame:
         """Lossless prefix-filtered n-gram Jaccard near-dup pairs."""
-        from .operators.dedup import prefix_filter_jaccard_pairs
-        return prefix_filter_jaccard_pairs(self.table("documents"))
+        from .operators.dedup import ngram_jaccard_pairs
+        return ngram_jaccard_pairs(self.table("documents"))
 
     def shard_routing(self, n_nodes: int = 4,
                       vnodes: int = 8) -> DataFrame:

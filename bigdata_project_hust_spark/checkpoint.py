@@ -159,6 +159,21 @@ def _run_dir(spark: SparkSession, base: str) -> str:
     return f"{base.rstrip('/')}/{spark.sparkContext.applicationId}"
 
 
+def _resolve_strategy(strategy: str | None, prefer: str) -> str:
+    """Explicit ``strategy`` > ``SPARK_GRAFT_CHECKPOINT_STRATEGY`` >
+    the call site's ``prefer``.  The env var accepts only
+    ``local``/``reliable`` (see :func:`materialize`)."""
+    if strategy is not None:
+        return strategy
+    env = os.environ.get("SPARK_GRAFT_CHECKPOINT_STRATEGY")
+    if env == "cache":
+        raise ValueError(
+            "SPARK_GRAFT_CHECKPOINT_STRATEGY accepts only 'local' "
+            "or 'reliable': 'cache' cannot cut lineage, which the "
+            "prefer='local' loop sites require for correctness")
+    return env or prefer
+
+
 def materialize(df: DataFrame, label: str = "intermediate",
                 strategy: str | None = None,
                 path: str | None = None,
@@ -188,14 +203,7 @@ def materialize(df: DataFrame, label: str = "intermediate",
     OOMs), so a global flip back onto ``cache`` would silently break
     them — it is rejected loudly instead (ADVICE r7).
     """
-    if strategy is None:
-        env = os.environ.get("SPARK_GRAFT_CHECKPOINT_STRATEGY")
-        if env == "cache":
-            raise ValueError(
-                "SPARK_GRAFT_CHECKPOINT_STRATEGY accepts only 'local' "
-                "or 'reliable': 'cache' cannot cut lineage, which the "
-                "prefer='local' loop sites require for correctness")
-        strategy = env or prefer
+    strategy = _resolve_strategy(strategy, prefer)
     if strategy == "cache":
         from pyspark import StorageLevel
         # always eager: a lazily-persisted frame loses the cache-fill
@@ -247,14 +255,7 @@ def materialize_counted(df: DataFrame, label: str = "intermediate",
     - ``reliable``: the count comes from the re-read parquet footers
       (metadata-only job, no row reads).
     """
-    if strategy is None:
-        env = os.environ.get("SPARK_GRAFT_CHECKPOINT_STRATEGY")
-        if env == "cache":
-            raise ValueError(
-                "SPARK_GRAFT_CHECKPOINT_STRATEGY accepts only 'local' "
-                "or 'reliable': 'cache' cannot cut lineage, which the "
-                "prefer='local' loop sites require for correctness")
-        strategy = env or prefer
+    strategy = _resolve_strategy(strategy, prefer)
     if strategy == "cache":
         from pyspark import StorageLevel
         out = df.persist(StorageLevel.MEMORY_AND_DISK)

@@ -36,39 +36,6 @@ _RUNTIME_CONF = {
 }
 
 
-def spread_input(df: DataFrame) -> DataFrame:
-    """Round-robin repartition a scan to session parallelism — ONLY
-    when it arrives with fewer partitions.
-
-    The fixture tables are each ONE small single-row-group parquet
-    file, so every scan is ONE task and all map-side work before the
-    first exchange serializes onto a single core. The exchange is
-    only worth paying where the per-row CPU is measured heavy: the r10
-    engine-wide rollout to ~50 text/dedup/curation sites measured
-    NEUTRAL at fixture text sizes and was rolled back in r11 (the
-    driver bench showed the added full-corpus exchange as a net loss
-    at 32 cores on all but one site). The sites that keep it are the
-    measured-heavy ones: the multimodal codec asset builders
-    (plans/queries._mm_*_assets — decode is seconds of CPU per core,
-    a 3x query win) and ``subword_piece_counts`` (the engine's
-    heaviest per-row Catalyst fold — 1.37x at 32 cores and the
-    suite's best core-scaling in the r10 driver bench).
-
-    Call it on RAW SCAN projections only, never on post-shuffle
-    frames: the partition probe (``df.rdd.getNumPartitions()``) would
-    eagerly execute query stages under AQE if the frame contained an
-    exchange. The partition-count gate makes it a strict NO-OP at
-    cluster scale, where a many-file table already arrives with more
-    splits than ``defaultParallelism``.
-    """
-    try:
-        cur = df.rdd.getNumPartitions()
-        n = df.sparkSession.sparkContext.defaultParallelism
-    except Exception:
-        return df
-    return df.repartition(n) if cur < n else df
-
-
 def ensure_runtime_conf(spark: SparkSession) -> None:
     for k, v in _RUNTIME_CONF.items():
         try:

@@ -33,7 +33,7 @@ from ..checkpoint import materialize
 
 from ..functions.scalar import stable_hash64
 from .dedup import shingles
-from .text import _tokens_prefer, tokens
+from .text import TOKENS_PREFER, tokens
 
 
 # ---------------------------------------------------------------------------
@@ -203,7 +203,7 @@ def dsir_logratio(df: DataFrame, target_cond, text_col: str = "text",
     toks = marked.select(
         F.col(id_col), F.col("__is_t"),
         F.explode(tokens(text_col)).alias("term")).transform(
-        materialize, "dsir_tokens", prefer=_tokens_prefer())
+        materialize, "dsir_tokens", prefer=TOKENS_PREFER)
     vocab = (toks.groupBy("term")
                  .agg(F.count("*").alias("__tf_r"),
                       F.sum("__is_t").alias("__tf_t")))

@@ -19,8 +19,6 @@ and immediately partially aggregated.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from ..checkpoint import materialize, materialize_counted
@@ -32,15 +30,10 @@ MINHASH_BANDS = 4       # 4 bands × 4 rows
 SIMHASH_BITS = 60       # stable_hash64 yields 60 usable bits
 SIMHASH_BAND_BITS = 12  # 5 bands of 12 bits
 CC_BROADCAST_MAX_EDGES = 4_000_000  # label-table broadcast gate (CC)
-# Shingle-count gate for staging SHARED MULTI-CONSUMER frames. Since
-# round 10 the PPJoin prefix indexes themselves materialize
-# unconditionally (the 32-core re-bisect found no size where lazy
-# wins — Pareto at the ngram_jaccard_prefix call site); the constant
-# still gates the minhash-signature staging, whose own crossover
-# (barrier loses at sf0.1, wins past ~1M shingles) is a separate
-# measurement on a different frame shape (packed signature agg, not a
-# prefix window) and stands until re-bisected at 32 cores.
-PPJOIN_PREF_MAT_MIN_SHINGLES = 1_000_000
+# Shingle-count gate for staging the MinHash signature table (see
+# minhash_near_duplicates): the barrier loses at sf0.1 and wins past
+# ~1M shingles.
+MINHASH_SIG_MAT_MIN_SHINGLES = 1_000_000
 
 
 def exact_duplicates(df: DataFrame, text_col: str = "text",
@@ -161,9 +154,9 @@ def dense_ids(values: DataFrame, col: str | list[str],
     partition already encodes (partition index << 33) + a sequential
     in-partition counter, so pid and rank are two bit-ops on one
     codegen'd column — range exchange, in-partition sort, projection,
-    all one stage.  Measured (scripts/dense_ids_ab.py, driver protocol
-    local[32], synthetic distinct ~48-char strings, reps=3): 5M vocab
-    2.89 s -> 1.57 s median; 20M vocab 41.8 s -> 12.4 s median /
+    all one stage.  Measured (driver protocol local[32], synthetic
+    distinct ~48-char strings, reps=3): 5M vocab 2.89 s -> 1.57 s
+    median; 20M vocab 41.8 s -> 12.4 s median /
     7.6 s -> 6.7 s min (co-tenant spread at 20M; new wins at every
     size by every statistic).
 
@@ -171,7 +164,8 @@ def dense_ids(values: DataFrame, col: str | list[str],
     boundaries are sampled per physical exchange, so two independent
     evaluations may assign different (equally valid) bijections —
     materialize the result (or its consumer) when more than one
-    branch must agree on the mapping, as jaccard_verify does.
+    branch must agree on the mapping, as the n-gram Jaccard kernels
+    do.
     ``col`` may be a LIST of columns — the id then ranks the tuple
     lexicographically (range partitioning and the in-partition sort
     both take the column list), which is how the suffix-rank prefix
@@ -211,14 +205,18 @@ def dense_ids(values: DataFrame, col: str | list[str],
 
 def jaccard_verify(pairs: DataFrame, sh: DataFrame,
                    id_col: str = "doc_id",
-                   threshold_num: int = 1, threshold_den: int = 2,
-                   strategy: str = "arrays",
-                   assume_distinct: bool = False,
-                   rekey: bool = False) -> DataFrame:
+                   threshold_num: int = 1,
+                   threshold_den: int = 2) -> DataFrame:
     """Exact Jaccard over shingle sets for candidate pairs; keeps pairs
     with jaccard >= threshold_num/threshold_den using integer math only
     (den*inter >= num*union) — no float comparisons, so the oracle
     matches bit-for-bit.
+
+    ``sh`` must carry DISTINCT (doc, sh) rows — every engine pipeline
+    does, because :func:`shingles` dedups map-side via
+    ``array_distinct`` before its explode — so set sizes are plain
+    counts and the sets plain ``collect_list`` arrays, with no
+    distinct pass.
 
     PPJoin length filter first: jaccard >= t implies
     t·max(|A|,|B|) <= min(|A|,|B|), so size-incompatible pairs are
@@ -227,108 +225,38 @@ def jaccard_verify(pairs: DataFrame, sh: DataFrame,
     skew-length corpora it is the cheapest pruning lever the verify
     has.
 
-    Jaccard is defined over shingle SETS, so ``sh`` is treated
-    set-wise: duplicate (doc, sh) rows are collapsed by both
-    strategies (``collect_set``/``count_distinct`` on the arrays
-    path, a distinct projection on the explode path) — the two
-    strategies agree even on non-distinct inputs (ADVICE r5: the
-    earlier collect_list/count(*) pair silently diverged from the
-    explode form when callers passed duplicate shingle rows).
-    ``assume_distinct=True`` skips that collapse (plain
-    count/collect_list, no distinct pass) for callers whose ``sh``
-    provably carries distinct (doc, sh) rows already — every internal
-    pipeline qualifies because :func:`shingles` dedups map-side via
-    ``array_distinct`` before its explode; the safe set-semantic path
-    stays the default for external callers.
-
-    Two intersection strategies, identical output (asserted in
-    tests/test_unit_operators.py):
-    - ``arrays`` (default): each side's shingle set rides along as an
-      array and the pair's intersection is one codegen'd
-      ``array_intersect`` — two hash joins, no exploded intermediate,
-      no (doc, sh)-keyed shuffle-agg. Measured 4× faster at sf0.1
-      (7.8 s → 2.0 s on 648k candidates). A doc in K pairs ships its
-      array K times — the same total bytes the explode form shuffles,
-      but fewer rows and one fewer exchange.
-    - ``explode``: the classic (pair × shingle) row expansion +
-      count agg. Row width stays constant regardless of document
-      size, so prefer it when single documents carry millions of
-      shingles (pathological logs/base64) and 100 MB+ pair rows
-      would stall stragglers.
-
-    ``rekey=True`` LOSSLESSLY replaces each shingle with a dense
-    integer id before set formation: set sizes, intersections and
-    unions are invariant under a bijection, so the output is
-    bit-identical (asserted in tests), but the pair join ships
-    8-byte ints instead of n-gram strings and ``array_intersect``
-    hashes longs instead of ~60-char text — measured 5.7 s → 3.1 s
-    on 648k candidate pairs × ~52-shingle documents at sf0.1. The
-    dense rank is fully DISTRIBUTED (the round-8 judge's last
-    single-task-sort note, now closed): range-partition the distinct
-    vocabulary, sort within each partition (each task sorts only its
-    own slice; the in-partition rank falls out of
-    ``monotonically_increasing_id`` bit-ops, costing no second
-    exchange), then add per-partition offsets from a partition-count
-    cumsum (a partition-COUNT-sized frame, not vocabulary-sized) —
-    ids stay a bijection, no task ever sorts the whole vocabulary, so
-    the path works at web-scale vocabularies.
-    The rekeyed frame is materialized: range boundaries are sampled
-    per physical exchange, so two independent evaluations of the
-    subtree could assign DIFFERENT (equally valid) ids — the barrier
-    guarantees every consumer (the explode path reads it twice) sees
-    one id assignment."""
-    if strategy not in ("arrays", "explode"):
-        raise ValueError(f"unknown verify strategy {strategy!r}")
+    Each side's shingle set rides along as an array and the pair's
+    intersection is one codegen'd ``array_intersect`` — two hash
+    joins, no exploded (pair × shingle) intermediate, no (doc, sh)-
+    keyed shuffle-agg. Measured 4× faster than that explode form at
+    sf0.1 (7.8 s → 2.0 s on 648k candidates). A doc in K pairs ships
+    its array K times — the same total bytes the explode form
+    shuffles, but fewer rows and one fewer exchange. Callers that
+    rekey shingles to dense longs first (the n-gram Jaccard kernels)
+    make the pair join ship 8-byte ints and ``array_intersect`` hash
+    longs instead of ~60-char text — measured 5.7 s → 3.1 s on 648k
+    candidate pairs × ~52-shingle documents at sf0.1; set sizes,
+    intersections and unions are invariant under the bijection."""
     if threshold_num < 1:
-        # at t = 0 the two strategies diverge (explode's inner join
-        # drops zero-intersection pairs; arrays would keep them)
+        # at t = 0 every candidate passes, disjoint pairs included, so
+        # the verify would stop being a filter on shared shingles
         raise ValueError("threshold_num must be >= 1")
-    if rekey:
-        ids = dense_ids(sh.select("sh").distinct(), "sh")
-        sh = materialize(
-            sh.join(ids, "sh").select(F.col(id_col),
-                                      F.col("__sid").alias("sh")),
-            "rekeyed_sh", prefer="local")
-    n_agg = F.count("*") if assume_distinct else F.count_distinct("sh")
-    set_agg = F.collect_list("sh") if assume_distinct \
-        else F.collect_set("sh")
-    sizes = sh.groupBy(id_col).agg(n_agg.alias("n_sh"))
-    na = sizes.select(F.col(id_col).alias("doc_a"), F.col("n_sh").alias("n_a"))
-    nb = sizes.select(F.col(id_col).alias("doc_b"), F.col("n_sh").alias("n_b"))
-    if strategy == "arrays":
-        sets = sh.groupBy(id_col).agg(set_agg.alias("ss"),
-                                      n_agg.alias("n_sh"))
-        pa = sets.select(F.col(id_col).alias("doc_a"),
-                         F.col("ss").alias("__sa"),
-                         F.col("n_sh").alias("n_a"))
-        pb = sets.select(F.col(id_col).alias("doc_b"),
-                         F.col("ss").alias("__sb"),
-                         F.col("n_sh").alias("n_b"))
-        out = (pairs.join(pa, "doc_a").join(pb, "doc_b")
-               .where(F.least("n_a", "n_b") * threshold_den
-                      >= F.greatest("n_a", "n_b") * threshold_num)
-               .withColumn("inter_size",
-                           F.size(F.array_intersect("__sa", "__sb"))
-                            .cast("long"))
-               .withColumn("union_size",
-                           F.col("n_a") + F.col("n_b")
-                           - F.col("inter_size")))
-    else:
-        p = (pairs.join(na, "doc_a").join(nb, "doc_b")
-                  .where(F.least("n_a", "n_b") * threshold_den
-                         >= F.greatest("n_a", "n_b") * threshold_num))
-        dsh = sh.select(id_col, "sh") if assume_distinct \
-            else sh.select(id_col, "sh").distinct()
-        sa = dsh.select(F.col(id_col).alias("doc_a"), F.col("sh"))
-        sb = dsh.select(F.col(id_col).alias("doc_b"), F.col("sh"))
-        inter = (p.select("doc_a", "doc_b")
-                  .join(sa, "doc_a").join(sb, ["doc_b", "sh"])
-                  .groupBy("doc_a", "doc_b")
-                  .agg(F.count("*").alias("inter_size")))
-        out = (inter.join(na, "doc_a").join(nb, "doc_b")
-                    .withColumn("union_size",
-                                F.col("n_a") + F.col("n_b")
-                                - F.col("inter_size")))
+    sets = sh.groupBy(id_col).agg(F.collect_list("sh").alias("ss"),
+                                  F.count("*").alias("n_sh"))
+    pa = sets.select(F.col(id_col).alias("doc_a"),
+                     F.col("ss").alias("__sa"),
+                     F.col("n_sh").alias("n_a"))
+    pb = sets.select(F.col(id_col).alias("doc_b"),
+                     F.col("ss").alias("__sb"),
+                     F.col("n_sh").alias("n_b"))
+    out = (pairs.join(pa, "doc_a").join(pb, "doc_b")
+           .where(F.least("n_a", "n_b") * threshold_den
+                  >= F.greatest("n_a", "n_b") * threshold_num)
+           .withColumn("inter_size",
+                       F.size(F.array_intersect("__sa", "__sb"))
+                        .cast("long"))
+           .withColumn("union_size",
+                       F.col("n_a") + F.col("n_b") - F.col("inter_size")))
     return (out.where(F.col("inter_size") * threshold_den
                       >= F.col("union_size") * threshold_num)
                .select("doc_a", "doc_b", "inter_size", "union_size"))
@@ -363,22 +291,17 @@ def minhash_near_duplicates(df: DataFrame, text_col: str = "text",
     # the banded candidate self-join references the SIGNATURE agg
     # subtree twice (exchange reuse does not fire across the aliased
     # branches — the same measured effect as PPJoin's prefix index).
-    # Scale crossover like PPJoin's: at sf0.1 the barrier loses
-    # (paired A/B 1.72 s → 1.98 s, the duplicated agg over 260k
-    # shingles is cheap); past the shingle gate — counted free on the
-    # materialized sh — the duplicated corpus-sized agg dominates.
+    # Scale crossover: at sf0.1 the barrier loses (paired A/B 1.72 s →
+    # 1.98 s, the duplicated agg over 260k shingles is cheap); past the
+    # shingle gate — counted free on the materialized sh — the
+    # duplicated corpus-sized agg dominates.
     # simhash_near_duplicates materializes unconditionally because its
     # signature build (wide packed-lane agg) is expensive at ANY size.
     sig = minhash_signatures(sh, id_col)
-    _mm = os.environ.get("SPARK_GRAFT_MINHASH_SIG", "auto")
-    if _mm == "auto":
-        _mm = "local" if n_sh >= PPJOIN_PREF_MAT_MIN_SHINGLES \
-            else "off"
-    if _mm != "off":
-        sig = materialize(sig, "minhash_sig", prefer=_mm)
+    if n_sh >= MINHASH_SIG_MAT_MIN_SHINGLES:
+        sig = materialize(sig, "minhash_sig", prefer="local")
     cands = candidate_pairs(minhash_bands(sig, id_col), id_col)
-    return jaccard_verify(cands, sh, id_col, threshold_num,
-                          threshold_den, assume_distinct=True)
+    return jaccard_verify(cands, sh, id_col, threshold_num, threshold_den)
 
 
 def connected_components(pairs: DataFrame, src: str = "doc_a",
@@ -585,36 +508,103 @@ def duplicate_cluster_keepers(pairs: DataFrame, src: str = "doc_a",
                      F.count("*").alias("cluster_size")))
 
 
+def _rekeyed_shingles(df: DataFrame, text_col: str, id_col: str,
+                      n: int) -> DataFrame:
+    """Shared prologue of the n-gram Jaccard kernels: shingle, count
+    each shingle's document frequency, and replace every shingle by a
+    dense long id ranked by ``(__df, sh)`` — so ascending id IS the
+    PPJoin total order (rarest first, then value). Returns the
+    materialized ``(id_col, sh, __df)`` frame with ``sh`` now the id.
+
+    The df agg doubles as the dense-id vocabulary and the df join
+    doubles as the rekey, so every stage past it (prefix windows,
+    candidate self-joins, the verify's set aggregation and
+    ``array_intersect``) runs on 8-byte longs instead of ~60-char
+    n-gram strings. Output of every consumer is unchanged: Jaccard is
+    invariant under any shingle bijection, and the df cap is a filter
+    on the carried ``__df``."""
+    sh = materialize(shingles(df, text_col, id_col, n), "shingles",
+                     prefer="local")
+    vocab = sh.groupBy("sh").agg(F.count("*").alias("__df"))
+    ids = dense_ids(vocab, ["__df", "sh"])
+    return materialize(
+        sh.join(ids, "sh").select(F.col(id_col),
+                                  F.col("__sid").alias("sh"), "__df"),
+        "rekeyed_sh", prefer="local")
+
+
+def _self_join_pairs(index: DataFrame, id_col: str) -> DataFrame:
+    """Distinct (doc_a < doc_b) pairs sharing at least one ``sh``."""
+    return (index.alias("a").join(index.alias("b"), "sh")
+                 .where(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+                 .select(F.col(f"a.{id_col}").alias("doc_a"),
+                         F.col(f"b.{id_col}").alias("doc_b"))
+                 .distinct())
+
+
 def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
                         id_col: str = "doc_id", n: int = 3,
                         threshold_num: int = 3,
                         threshold_den: int = 10) -> DataFrame:
-    """n-gram Jaccard similarity via shingle-inverted-index join (no
-    LSH): pairs sharing >= 1 shingle, exact Jaccard filter. More
-    recall than MinHash, more compute — the verify path for audits.
-    The inverted-index join bounds work to pairs that actually share a
-    shingle (never a cross product).
+    """Exact n-gram Jaccard pairs (no LSH): every pair of documents
+    with Jaccard ≥ threshold_num/threshold_den over their word
+    n-gram sets, with exact integer intersection and union sizes.
+    More recall than MinHash, more compute — the verify path for
+    audits. Output equals the plain inverted-index self-join
+    (pairs sharing ≥ 1 shingle, then exact verify), which is what
+    the oracle computes.
 
-    Rekey-first (r10 optimization pass, the ngram_jaccard_prefix
-    restructure): the verify's dense-integer rekey moves ahead of the
-    inverted-index self-join, so the join — the dominant shuffle —
-    ships 8-byte longs instead of n-gram strings. Candidate pairs
-    (share ≥ 1 shingle) and Jaccard are both invariant under the
-    bijection; output unchanged."""
-    sh = materialize(shingles(df, text_col, id_col, n), "shingles",
-                     prefer="local")
-    ids = dense_ids(sh.select("sh").distinct(), "sh")
-    shi = materialize(
-        sh.join(ids, "sh").select(F.col(id_col),
-                                  F.col("__sid").alias("sh")),
-        "rekeyed_sh", prefer="local")
-    pairs = (shi.alias("a").join(shi.alias("b"), "sh")
-                .where(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-                .select(F.col(f"a.{id_col}").alias("doc_a"),
-                        F.col(f"b.{id_col}").alias("doc_b"))
-                .distinct())
-    return jaccard_verify(pairs, shi, id_col, threshold_num,
-                          threshold_den, assume_distinct=True)
+    Candidates come from a prefix-filtered set-similarity join
+    (Bayardo et al. 2007 "Scaling Up All Pairs Similarity Search";
+    Xiao et al. 2008 PPJoin): order every document's shingles by a
+    global total order (ascending document frequency — rarest first —
+    then shingle value); a pair with Jaccard ≥ t = num/den must share
+    at least one shingle among each side's first
+    ``m − ⌈t·m⌉ + 1`` shingles. Indexing only prefixes is therefore
+    LOSSLESS — unlike the df-cap variant there is no recall loss, yet
+    the inverted index shrinks by ~t·Σm and, because prefixes are the
+    RAREST shingles, the quadratic per-bucket term collapses exactly
+    where it hurts (the ubiquitous-shingle buckets never enter the
+    index). The exact-Jaccard verify runs on full shingle sets.
+
+    Cost shape: one df agg (shuffle on shingle), one per-doc rank
+    window (shuffle on doc), the prefix self-join (shuffle on
+    shingle, buckets ≤ min(df, prefix-membership)), then the verify
+    joins — each keyed, none cartesian. Rekeying to dense ids up
+    front (see :func:`_rekeyed_shingles`) measured (paired A/B,
+    local[32], reps=5, co-tenant load) sf0.1 median 7.59 s → 6.26 s,
+    min 7.30 → 5.80 (0.79-0.82×, new won all 5 paired reps); plan
+    diff in plans/r10/dedup_ngram_prefix_{before,after}.txt."""
+    shi = _rekeyed_shingles(df, text_col, id_col, n).select(id_col, "sh")
+    w = Window.partitionBy(id_col).orderBy(F.col("sh").asc())
+    ranked = (shi
+              .withColumn("__rk", F.row_number().over(w))
+              # per-doc shingle count as a whole-partition window
+              # count: the rank window already hash-partitioned on
+              # the doc id, so this rides the SAME exchange — one
+              # fewer agg and one fewer join than a sizes-table
+              # aggregate (equal output, verified)
+              .withColumn("__m", F.count("*").over(
+                  Window.partitionBy(id_col))))
+    # prefix length m − ⌈t·m⌉ + 1, integer ceil: (m·num + den − 1) div den
+    plen = (F.col("__m")
+            - F.expr(f"(__m * {threshold_num} + {threshold_den - 1}) "
+                     f"div {threshold_den}") + 1)
+    # pref feeds BOTH sides of the candidate self-join; left lazy the
+    # df-agg + join + two-window subtree above runs once per side
+    # (exchange reuse does not fire across the aliased branches).
+    # Re-bisected at 32-core parallelism (reps=3 medians), the
+    # barrier wins at EVERY size:
+    #   260k shingles: local 6.43 s vs off  8.36 s (1.30×)
+    #   1.04M        : local 9.63 s vs off 10.30 s (1.07×)
+    #   2.60M        : local 21.9 s vs off  50.2 s (2.30×)
+    # — at high parallelism the duplicated subtree costs two full
+    # exchanges of the shingle frame while the barrier fill is wide.
+    pref = materialize(
+        ranked.where(F.col("__rk") <= plen).select(F.col(id_col), "sh"),
+        "ppjoin_prefix", prefer="local")
+    return jaccard_verify(_self_join_pairs(pref, id_col), shi, id_col,
+                          threshold_num, threshold_den)
 
 
 def ngram_jaccard_pairs_capped(df: DataFrame, text_col: str = "text",
@@ -633,32 +623,14 @@ def ngram_jaccard_pairs_capped(df: DataFrame, text_col: str = "text",
     threshold anyway in practice). The exact-Jaccard verify still uses
     the FULL shingle sets, so surviving pairs carry true scores.
     """
-    sh = materialize(shingles(df, text_col, id_col, n), "shingles",
-                     prefer="local")
-    # Rekey-first (r10 optimization pass): the df agg doubles as the
-    # dense-id vocabulary (__df rides through dense_ids as a carried
-    # rank column — sh is unique, so ranking by (sh, __df) equals
-    # ranking by sh), the df join doubles as the rekey, and the rare
-    # filter becomes a cheap filter over the materialized rekeyed
-    # frame — one corpus-wide agg and one corpus-wide join FEWER than
-    # the rekey-last form, and the candidate self-join ships longs.
-    # The old separate capped_index barrier is gone: both self-join
-    # sides re-run only a filter over checkpointed blocks.
-    vocab = sh.groupBy("sh").agg(F.count("*").alias("__df"))
-    ids = dense_ids(vocab, ["sh", "__df"])
-    shi = materialize(
-        sh.join(ids, "sh").select(F.col(id_col),
-                                  F.col("__sid").alias("sh"), "__df"),
-        "rekeyed_capped", prefer="local")
+    # the rare filter is a cheap filter over the materialized rekeyed
+    # frame: both self-join sides re-run only that filter over
+    # checkpointed blocks, and the candidate self-join ships longs
+    shi = _rekeyed_shingles(df, text_col, id_col, n)
     sh_rare = shi.where(F.col("__df") <= max_df).select(id_col, "sh")
-    pairs = (sh_rare.alias("a").join(sh_rare.alias("b"), "sh")
-                    .where(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-                    .select(F.col(f"a.{id_col}").alias("doc_a"),
-                            F.col(f"b.{id_col}").alias("doc_b"))
-                    .distinct())
-    return jaccard_verify(pairs, shi.select(id_col, "sh"), id_col,
-                          threshold_num, threshold_den,
-                          assume_distinct=True)
+    return jaccard_verify(_self_join_pairs(sh_rare, id_col),
+                          shi.select(id_col, "sh"), id_col,
+                          threshold_num, threshold_den)
 
 
 SIMHASH_LANE_BITS = 20   # packed-counter lane width (3 lanes per long)
@@ -856,17 +828,12 @@ def span_duplicates(df: DataFrame, text_col: str = "text",
     # sp feeds BOTH the corpus-frequency agg and the probe side of the
     # join; left lazy the span generation (the 20-token concat_ws gram
     # build — the CPU-heavy part) runs twice. Materialized rows are
-    # narrow (5 cols, hash not string). Unlike the ppjoin PREFIX site
-    # (whose duplicated subtree is cheap below ~1M shingles, so it
-    # gates on scale), the span build is CPU-dominant at EVERY size —
-    # paired A/Bs, local/off: sf0.01 0.79x, sf0.1 0.66x (2.64→1.74 s),
-    # 30x probe 0.06x (97.5→5.45 s) — so the barrier is unconditional
-    # (ADVICE r8 asked for the measurement, not a pattern citation).
-    # Env knob for paired A/Bs, same pattern as SPARK_GRAFT_PPJOIN_PREF.
-    sp = positional_spans(df, text_col, id_col, n)
-    _sm = os.environ.get("SPARK_GRAFT_SPAN_MAT", "local")
-    if _sm != "off":
-        sp = materialize(sp, "span_positional", prefer=_sm)
+    # narrow (5 cols, hash not string). The span build is CPU-dominant
+    # at EVERY size — paired A/Bs, local/off: sf0.01 0.79x, sf0.1 0.66x
+    # (2.64→1.74 s), 30x probe 0.06x (97.5→5.45 s) — so the barrier is
+    # unconditional.
+    sp = materialize(positional_spans(df, text_col, id_col, n),
+                     "span_positional", prefer="local")
     freq = sp.groupBy("span_h").agg(F.count("*").alias("span_freq"))
     j = sp.join(freq, "span_h")
     dup = F.col("span_freq") >= 2
@@ -903,104 +870,6 @@ def span_duplicates(df: DataFrame, text_col: str = "text",
         frac.cast("long").alias("dup_frac_e6"))
 
 
-def ngram_jaccard_prefix(df: DataFrame, text_col: str = "text",
-                         id_col: str = "doc_id", n: int = 3,
-                         threshold_num: int = 3,
-                         threshold_den: int = 10) -> DataFrame:
-    """Prefix-filtered set-similarity join (Bayardo et al. 2007
-    "Scaling Up All Pairs Similarity Search"; Xiao et al. 2008
-    PPJoin): EXACTLY the ``ngram_jaccard_pairs`` output, but candidate
-    generation indexes only each document's PREFIX shingles.
-
-    Prefix-filtering principle: order every document's shingles by a
-    global total order (ascending document frequency — rarest first —
-    then shingle value); a pair with Jaccard ≥ t = num/den must share
-    at least one shingle among each side's first
-    ``m − ⌈t·m⌉ + 1`` shingles. Indexing only prefixes is therefore
-    LOSSLESS — unlike the df-cap variant there is no recall loss, yet
-    the inverted index shrinks by ~t·Σm and, because prefixes are the
-    RAREST shingles, the quadratic per-bucket term collapses exactly
-    where it hurts (the ubiquitous-shingle buckets never enter the
-    index). The exact-Jaccard verify runs on full shingle sets.
-
-    Cost shape: one df agg (shuffle on shingle), one per-doc rank
-    window (shuffle on doc), the prefix self-join (shuffle on
-    shingle, buckets ≤ min(df, prefix-membership)), then the verify
-    joins — each keyed, none cartesian.
-
-    REKEY-FIRST (r10 optimization pass): the dense-integer rekey the
-    verify used to apply at the end now happens up front, and the ids
-    are ranked by ``(__df, sh)`` — so ascending id IS the PPJoin
-    total order (rarest first, then value). Every downstream stage
-    (the per-doc rank window, the prefix self-join, the verify's set
-    aggregation and array_intersect) then runs on 8-byte longs
-    instead of ~60-char n-gram strings, and two whole corpus-wide
-    stages disappear: the verify's separate ``sh.distinct()`` vocab
-    agg (the df agg doubles as the vocabulary) and its separate
-    rekey join of the shingle frame (the df join doubles as the
-    rekey). Output is IDENTICAL: Jaccard is invariant under any
-    shingle bijection, and the candidate set is invariant because
-    (__sid asc) == (__df asc, sh asc) — the same order the string
-    form used (asserted old==new at sf0.001 AND sf0.01 when this
-    landed). Measured (paired A/B, local[32], reps=5, co-tenant
-    load): sf0.1 median 7.59 s → 6.26 s, min 7.30 → 5.80 (0.79-0.82×,
-    new won all 5 paired reps); plan diff in
-    plans/r10/dedup_ngram_prefix_{before,after}.txt."""
-    from pyspark.sql import Window
-    sh = materialize(shingles(df, text_col, id_col, n), "shingles",
-                     prefer="local")
-    vocab = sh.groupBy("sh").agg(F.count("*").alias("__df"))
-    ids = dense_ids(vocab, ["__df", "sh"])
-    shi = materialize(
-        sh.join(ids.select("sh", "__sid"), "sh")
-          .select(F.col(id_col), F.col("__sid").alias("sh")),
-        "rekeyed_sh", prefer="local")
-    w = Window.partitionBy(id_col).orderBy(F.col("sh").asc())
-    ranked = (shi
-              .withColumn("__rk", F.row_number().over(w))
-              # per-doc shingle count as a whole-partition window
-              # count: the rank window already hash-partitioned on
-              # the doc id, so this rides the SAME exchange — one
-              # fewer agg and one fewer join than a sizes-table
-              # aggregate (equal output, verified)
-              .withColumn("__m", F.count("*").over(
-                  Window.partitionBy(id_col))))
-    # prefix length m − ⌈t·m⌉ + 1, integer ceil: (m·num + den − 1) div den
-    plen = (F.col("__m")
-            - F.expr(f"(__m * {threshold_num} + {threshold_den - 1}) "
-                     f"div {threshold_den}") + 1)
-    # pref feeds BOTH sides of the candidate self-join; left lazy the
-    # df-agg + join + two-window subtree above runs once per side
-    # (exchange reuse does not fire across the aliased branches).
-    # UNCONDITIONAL materialize since round 10: the 1M-shingle gate
-    # was tuned under builder conditions (8 cores) where the barrier
-    # lost 8% at sf0.1; re-bisected at the DRIVER's 32-core
-    # parallelism (VERDICT r9 #3, scripts/ppjoin_gate_bisect.py,
-    # reps=3 medians) the barrier wins at EVERY size:
-    #   260k shingles: local 6.43 s vs off  8.36 s (1.30×)
-    #   1.04M        : local 9.63 s vs off 10.30 s (1.07×)
-    #   2.60M        : local 21.9 s vs off  50.2 s (2.30×)
-    # — at high parallelism the duplicated subtree costs two full
-    # exchanges of the shingle frame while the barrier fill is wide;
-    # there is no measured regime left where lazy wins. Env knob kept
-    # for paired A/Bs (off/local/reliable), same pattern as
-    # SPARK_GRAFT_TOKENS_PREFER.
-    pref = ranked.where(F.col("__rk") <= plen).select(F.col(id_col), "sh")
-    _pm = os.environ.get("SPARK_GRAFT_PPJOIN_PREF", "auto")
-    if _pm == "auto":
-        _pm = "local"
-    if _pm != "off":
-        pref = materialize(pref, "ppjoin_prefix", prefer=_pm)
-    pairs = (pref.alias("a").join(pref.alias("b"), "sh")
-                 .where(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-                 .select(F.col(f"a.{id_col}").alias("doc_a"),
-                         F.col(f"b.{id_col}").alias("doc_b"))
-                 .distinct())
-    # shi already carries the dense ids — no second rekey
-    return jaccard_verify(pairs, shi, id_col, threshold_num,
-                          threshold_den, assume_distinct=True)
-
-
 def fuzzy_join_ed1(df: DataFrame, text_col: str,
                    id_col: str) -> DataFrame:
     """Edit-distance ≤ 1 self-join via DELETION-NEIGHBORHOOD blocking
@@ -1031,12 +900,10 @@ def fuzzy_join_ed1(df: DataFrame, text_col: str,
     # dominant at every size, so the barrier is unconditional —
     # paired A/Bs, local/off: sf0.01 0.91x (fuzzy_customer_names) /
     # 0.86x (entity_resolution_customers), sf0.1 0.80x (ADVICE r8
-    # asked for the measurement). Env knob for paired A/Bs.
-    v = df.select(F.col(id_col), s.alias("__s"),
-                                F.explode(variants).alias("__v"))
-    _vm = os.environ.get("SPARK_GRAFT_ED1_MAT", "local")
-    if _vm != "off":
-        v = materialize(v, "ed1_variants", prefer=_vm)
+    # asked for the measurement).
+    v = materialize(df.select(F.col(id_col), s.alias("__s"),
+                              F.explode(variants).alias("__v")),
+                    "ed1_variants", prefer="local")
     a = v.select(F.col(id_col).alias("id_a"), F.col("__s").alias("sa"),
                  F.col("__v"))
     b = v.select(F.col(id_col).alias("id_b"), F.col("__s").alias("sb"),
@@ -1047,91 +914,6 @@ def fuzzy_join_ed1(df: DataFrame, text_col: str,
                      F.levenshtein("sa", "sb").cast("long").alias("dist"))
              .where(F.col("dist") <= 1)
              .distinct())
-
-
-def connected_components_pj(pairs: DataFrame, src: str = "doc_a",
-                            dst: str = "doc_b",
-                            max_iter: int = 12,
-                            checkpoint_every: int = 3) -> DataFrame:
-    """Pointer-jumping connected components for HIGH-DIAMETER graphs:
-    each round relaxes over edges (as :func:`connected_components`)
-    AND THEN jumps ``label ← label's label``, so label trees halve in
-    depth every round — O(log diameter) rounds instead of
-    O(diameter). Same output contract: (node, component = min
-    reachable id).
-
-    Use this variant when the pair graph is genuinely chain-y
-    (road-network-like paths, linked-list-shaped lineages); the plain
-    min-propagation variant stays the right choice both for
-    clique-ish near-dup graphs (diameter 2-3) AND for dense lattices
-    — measured on entity_resolution_customers' ed≤1 name lattice at
-    sf0.01: plain 11.4 s vs pj 16.2 s, because high degree already
-    spreads min labels in few rounds and the extra self-join per
-    round then costs more than it saves. The crossover is real in
-    both directions, which is why both are kept (the 25-node-path
-    test is the case where pj wins: ~5 rounds vs 24).
-
-    Per round: one edge join + agg (relax) and one label self-join
-    (jump); convergence detected the same Observation way. Lineage
-    truncated via localCheckpoint every ``checkpoint_every`` rounds —
-    pointer jumping nests TWO joins per round, so the budget is
-    tighter than the plain variant's."""
-    from pyspark.sql import Observation
-
-    e = pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    # eager base-lineage truncation — same driver-heap rationale as
-    # connected_components (pj nests TWO joins per round, so the plan
-    # budget is even tighter)
-    edges = (e.unionByName(e.select(F.col("b").alias("a"),
-                                    F.col("a").alias("b")))
-              .distinct().transform(materialize, "inc_cc_edges"))
-    labels = (edges.select(F.col("a").alias("node")).distinct()
-                   .select("node", F.col("node").alias("component"))
-                   .persist())
-    for i in range(max_iter):
-        nbr = (edges.join(labels, edges["b"] == labels["node"])
-                    .groupBy("a")
-                    .agg(F.min("component").alias("nbr_comp")))
-        relaxed = (labels.join(nbr, labels["node"] == nbr["a"], "left")
-                   .select(labels["node"],
-                           F.least(labels["component"],
-                                   F.coalesce(F.col("nbr_comp"),
-                                              labels["component"]))
-                           .alias("component")))
-        # pointer jump: component ← component's component (labels
-        # always point at equal-or-smaller ids, so the jump can only
-        # shrink — monotone, convergence-safe)
-        parent = relaxed.select(F.col("node").alias("p_node"),
-                                F.col("component").alias("p_comp"))
-        obs = Observation(f"ccpj_round_{i}")
-        jumped = (relaxed.join(parent,
-                               relaxed["component"] == parent["p_node"],
-                               "left")
-                  .select(relaxed["node"],
-                          F.least(relaxed["component"],
-                                  F.coalesce(F.col("p_comp"),
-                                             relaxed["component"]))
-                          .alias("component")))
-        new_labels = (jumped
-                      .join(labels.select(F.col("node"),
-                                          F.col("component")
-                                          .alias("__old")), "node")
-                      .select("node", "component",
-                              (F.col("component") != F.col("__old"))
-                              .cast("long").alias("__chg"))
-                      .observe(obs, F.sum("__chg").alias("n_changed"))
-                      .drop("__chg")
-                      .persist())
-        if (i + 1) % checkpoint_every == 0:
-            new_labels = materialize(new_labels, "inc_labels",
-                                     eager=False, prefer="local")
-        new_labels.count()
-        labels.unpersist()
-        labels = new_labels
-        if (obs.get["n_changed"] or 0) == 0:
-            break
-    edges.unpersist()
-    return labels.select("node", "component")
 
 
 def incremental_near_duplicates(df: DataFrame, new_cond,
@@ -1177,7 +959,7 @@ def incremental_near_duplicates(df: DataFrame, new_cond,
     pairs = cand.select(F.col("new_doc").alias("doc_a"),
                         F.col("dup_of").alias("doc_b"))
     verified = jaccard_verify(pairs, sh, id_col, threshold_num,
-                              threshold_den, assume_distinct=True)
+                              threshold_den)
     return verified.select(
         F.col("doc_a").alias("new_doc"), F.col("doc_b").alias("dup_of"),
         "inter_size", "union_size")
@@ -1196,7 +978,7 @@ def containment_duplicates(df: DataFrame, text_col: str = "text",
     Candidates still come from the MinHash bands (recall tracks
     Jaccard, not containment — the standard engineering trade,
     documented; a containment-optimal index would be the prefix
-    filter on df-ordered shingles, see dedup_ngram_prefix). The
+    filter on df-ordered shingles, see ngram_jaccard_pairs). The
     containment test is integer cross-multiplication; the reported
     score is one integer division on the e6 grid."""
     sh = shingles(df, text_col, id_col)
@@ -1224,65 +1006,3 @@ def containment_duplicates(df: DataFrame, text_col: str = "text",
                     F.expr("(inter_size * 1000000)"
                            " div least(n_a, n_b)").cast("long")
                     .alias("cont_small_e6")))
-
-
-def prefix_filter_jaccard_pairs(df: DataFrame, text_col: str = "text",
-                                id_col: str = "doc_id", n: int = 3,
-                                threshold_num: int = 3,
-                                threshold_den: int = 10) -> DataFrame:
-    """AllPairs/PPJoin-style PREFIX-FILTERED n-gram Jaccard: order
-    every document's shingles by GLOBAL rarity (df asc, shingle asc —
-    a total order) and generate candidates only from each document's
-    first L = |d| - ceil(θ|d|) + 1 shingles.  If J(a,b) >= θ the two
-    prefixes must share a shingle, so unlike the df-cap variant this
-    pruning is LOSSLESS — same output as the full inverted-index join,
-    provably, at a fraction of the candidate volume (the frequent
-    shingles that dominate Σ df² never seed candidates; they only get
-    touched in the exact verify of surviving pairs).
-
-    ceil is the positive-operand (a+b-1) div b form. The global order
-    needs NO materialized global rank: within a document, ordering by
-    a global row_number over (df asc, sh asc) is identical to
-    ordering by (df asc, sh asc) directly — the rank is strictly
-    monotone in that key — so the per-doc prefix window sorts on the
-    key itself, eliminating what was a single-task |vocab|-row global
-    sort (a genuine scale killer on a web-scale vocabulary) plus one
-    join. The per-doc size rides the same exchange as a window count
-    (the ngram_jaccard_prefix pattern, including its r10 rekey-first
-    restructure: ids ranked by (__df, sh) make ascending id the
-    prefix order, so every stage past the rekey runs on longs).
-    Verification is the shared exact-integer jaccard_verify."""
-    from pyspark.sql import Window
-    sh = materialize(shingles(df, text_col, id_col, n), "shingles",
-                     prefer="local")
-    vocab = (sh.groupBy("sh").agg(F.count("*").alias("__df")))
-    ids = dense_ids(vocab, ["__df", "sh"])
-    shi = materialize(
-        sh.join(ids.select("sh", "__sid"), "sh")
-          .select(F.col(id_col), F.col("__sid").alias("sh")),
-        "rekeyed_sh", prefer="local")
-    wd = Window.partitionBy(id_col).orderBy(F.col("sh").asc())
-    prefix = (shi
-              .select(id_col, "sh",
-                      F.row_number().over(wd).alias("__pos"),
-                      F.count("*").over(
-                          Window.partitionBy(id_col)).alias("__n"))
-              .where(F.col("__pos")
-                     <= F.col("__n")
-                     - F.expr(f"({threshold_num} * __n "
-                              f"+ {threshold_den} - 1) "
-                              f"div {threshold_den}") + 1))
-    # prefix feeds both candidate sides; it derives from the
-    # materialized rekeyed frame by a window + filter, which is still
-    # expensive enough to stage — unconditional, same evidence as
-    # ngram_jaccard_prefix (the 32-core re-bisect found no size where
-    # the lazy form wins — Pareto table at that call site)
-    prefix = materialize(prefix.select(id_col, "sh"),
-                         "prefix_filter_idx", prefer="local")
-    a = prefix.select(F.col(id_col).alias("doc_a"), "sh")
-    b = prefix.select(F.col(id_col).alias("doc_b"), "sh")
-    pairs = (a.join(b, "sh")
-             .where(F.col("doc_a") < F.col("doc_b"))
-             .select("doc_a", "doc_b").distinct())
-    return jaccard_verify(pairs, shi, id_col, threshold_num,
-                          threshold_den, assume_distinct=True)

@@ -248,9 +248,8 @@ def triangle_count(edges: DataFrame, a: str = "pa",
         # notes. adj feeds BOTH array joins and AQE does not reuse an
         # exchange across consumers, so left lazy its groupBy +
         # collect_list subtree runs twice; materialized, the 10×
-        # 12M-edge probe halves (48.4 s → 25.4 s, phase-attributed in
-        # scripts/triangle_profile.py — the intersect phase alone fell
-        # 40.8 s → 15.4 s). prefer="local": one-shot big-array frame,
+        # 12M-edge probe halves (48.4 s → 25.4 s, phase-attributed —
+        # the intersect phase alone fell 40.8 s → 15.4 s). prefer="local": one-shot big-array frame,
         # ContextCleaner reclaims the blocks, and the measured win is
         # under localCheckpoint.
         adj = materialize(

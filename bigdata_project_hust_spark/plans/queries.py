@@ -765,7 +765,7 @@ def _oracle_cluster_keepers() -> str:
 
 
 def q_dedup_ngram_jaccard(spark, sf_dir):
-    """n-gram Jaccard pairs (inverted-index join, no LSH), ≥ 3/10."""
+    """n-gram Jaccard pairs (prefix-filtered join, no LSH), ≥ 3/10."""
     return dedup.ngram_jaccard_pairs(_t(spark, sf_dir, "documents"))
 
 
@@ -3206,8 +3206,10 @@ QUERIES: dict[str, QuerySpec] = {
     "dedup_cluster_keepers": QuerySpec(
         q_dedup_cluster_keepers, _oracle_cluster_keepers(),
         doc="one keeper per near-dup cluster + size (drop-list)"),
-    "dedup_ngram_jaccard": QuerySpec(q_dedup_ngram_jaccard, ORACLE_NGRAM,
-                                     doc="n-gram Jaccard pairs"),
+    "dedup_ngram_jaccard": QuerySpec(
+        q_dedup_ngram_jaccard, ORACLE_NGRAM,
+        doc="n-gram Jaccard pairs (kernel: dedup.ngram_jaccard_pairs, "
+            "PPJoin prefix-filtered join)"),
     "dedup_ngram_capped": QuerySpec(
         q_dedup_ngram_capped, ORACLE_NGRAM_CAPPED,
         doc="stop-shingle-capped n-gram Jaccard (bounded inverted index)"),

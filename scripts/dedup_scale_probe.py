@@ -96,7 +96,7 @@ def main() -> None:
         "exact_md5": lambda d: dedup.exact_duplicates(d).count(),
         "minhash_lsh": lambda d: dedup.minhash_near_duplicates(d).count(),
         "simhash": lambda d: dedup.simhash_near_duplicates(d).count(),
-        "ppjoin_prefix": lambda d: dedup.ngram_jaccard_prefix(d).count(),
+        "ppjoin_prefix": lambda d: dedup.ngram_jaccard_pairs(d).count(),
         "span_dedup": lambda d: dedup.span_duplicates(d, n=20).count(),
     }
     import math

@@ -362,11 +362,12 @@ def test_hll_register_agg_combines_map_side(spark):
 def test_subword_piece_counts_plan(spark):
     """The greedy subword fold is a pure nested-HOF projection — a
     Generate means the per-word loop became an explode/agg. One
-    round-robin Exchange (io.spread_input) is the only shuffle
-    allowed: the fold is the engine's CPU-heaviest per-row projection
-    and the fixture scan is one task, so spreading it is the one
-    spread_input site the r10/r11 driver benches confirmed as a real
-    win (1.37x at 32 cores, the suite's best 8->32 core scaling)."""
+    round-robin Exchange (the scan spread gated on partition count) is
+    the only shuffle allowed: the fold is the engine's CPU-heaviest
+    per-row projection and the fixture scan is one task, so spreading
+    it is the one input spread the r10/r11 driver benches confirmed as
+    a real win (1.37x at 32 cores, the suite's best 8->32 core
+    scaling)."""
     df = QUERIES["subword_piece_counts"].fn(spark, SF_SMOKE)
     plan = plan_of(df)
     assert n_nodes(plan, "Exchange") <= 1, plan

@@ -680,29 +680,24 @@ def test_pairwise_welch_plan_broadcast(spark):
 # Batch 5: prefix filter, consistent hashing, linear attribution
 # ===========================================================================
 
-from bigdata_project_hust_spark.operators.dedup import (
-    ngram_jaccard_pairs, prefix_filter_jaccard_pairs)
 from bigdata_project_hust_spark.operators.eventflow import (
     linear_attribution)
 from bigdata_project_hust_spark.operators.scale import (
     consistent_hash_routing)
 
+from .test_unit_operators import assert_prefix_kernel_matches_oracle
+
 
 def test_prefix_filter_equals_full_join(spark):
     """The AllPairs guarantee: prefix-filtered candidates produce
-    exactly the full inverted-index result (lossless pruning)."""
-    docs = spark.createDataFrame(
-        [(1, "alpha beta gamma delta epsilon zeta"),
-         (2, "alpha beta gamma delta epsilon eta"),
-         (3, "one two three four five six seven"),
-         (4, "one two three four five six eight"),
-         (5, "totally different words here now then")],
-        "doc_id long, text string")
-    full = {(r["doc_a"], r["doc_b"], r["inter_size"], r["union_size"])
-            for r in ngram_jaccard_pairs(docs).collect()}
-    pref = {(r["doc_a"], r["doc_b"], r["inter_size"], r["union_size"])
-            for r in prefix_filter_jaccard_pairs(docs).collect()}
-    assert pref == full and len(full) >= 2
+    exactly the full inverted-index result (lossless pruning), here on
+    pairs of docs that differ in one trailing word."""
+    assert_prefix_kernel_matches_oracle(spark, [
+        (1, "alpha beta gamma delta epsilon zeta"),
+        (2, "alpha beta gamma delta epsilon eta"),
+        (3, "one two three four five six seven"),
+        (4, "one two three four five six eight"),
+        (5, "totally different words here now then")])
 
 
 def test_consistent_hash_total_and_determinism(spark):

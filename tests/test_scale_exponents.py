@@ -119,7 +119,7 @@ def edges_1x_10x(spark):
      lambda d: dedup.minhash_near_duplicates(d).count(), 1.2),
     ("simhash", lambda d: dedup.simhash_near_duplicates(d).count(), 1.2),
     ("ppjoin_prefix",
-     lambda d: dedup.ngram_jaccard_prefix(d).count(), 1.2),
+     lambda d: dedup.ngram_jaccard_pairs(d).count(), 1.2),
     ("span_dedup",
      lambda d: dedup.span_duplicates(d, n=20).count(), 1.2),
 ])

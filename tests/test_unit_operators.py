@@ -1959,59 +1959,62 @@ def test_engine_facade_round4_surface(spark):
     assert pruned.count() == eng.table("lineitem").count()  # all match
 
 
+def assert_prefix_kernel_matches_oracle(spark, rows):
+    """The prefix-indexed kernel returns exactly the naive
+    inverted-index join (same pairs, same exact Jaccard counts),
+    computed independently by the ORACLE_NGRAM SQL in DuckDB over the
+    same rows."""
+    import duckdb
+    import pandas as pd
+    from bigdata_project_hust_spark.operators.dedup import (
+        ngram_jaccard_pairs)
+    from bigdata_project_hust_spark.plans.queries import ORACLE_NGRAM
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    got = {tuple(r) for r in ngram_jaccard_pairs(df).collect()}
+    con = duckdb.connect()
+    con.register("documents", pd.DataFrame(rows, columns=["doc_id", "text"]))
+    want = {tuple(int(v) for v in r)
+            for r in con.execute(ORACLE_NGRAM).fetchall()}
+    con.close()
+    assert got == want and len(want) > 0, rows[0]
+
+
 def test_prefix_join_equals_naive_join(spark):
     """Prefix filtering is LOSSLESS: on a corpus with a ubiquitous
     shared shingle plus one genuinely near-duplicate pair, the
     prefix-indexed join returns exactly the naive inverted-index
-    result (same pairs, same exact Jaccard counts)."""
-    from bigdata_project_hust_spark.operators.dedup import (
-        ngram_jaccard_pairs, ngram_jaccard_prefix)
+    result."""
     common = "the quick brown fox jumps over the lazy dog"
     rows = [(i, f"{common} filler{i} wing{i} item{i}") for i in range(8)]
     rows += [(100, "alpha beta gamma delta epsilon zeta eta"),
              (101, "alpha beta gamma delta epsilon zeta theta")]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    naive = {tuple(r) for r in ngram_jaccard_pairs(df).collect()}
-    pref = {tuple(r) for r in ngram_jaccard_prefix(df).collect()}
-    assert pref == naive and len(naive) > 0
+    assert_prefix_kernel_matches_oracle(spark, rows)
 
 
-def test_prefix_join_materialize_gate_branches_agree(spark, monkeypatch):
-    """The prefix index is materialized only past the shingle-count
-    gate (scale crossover measured both directions at round 8) —
-    force each branch via the env knob and assert identical output."""
-    from bigdata_project_hust_spark.operators.dedup import (
-        ngram_jaccard_prefix)
-    rows = [(100, "alpha beta gamma delta epsilon zeta eta"),
-            (101, "alpha beta gamma delta epsilon zeta theta"),
-            (102, "one two three four five six seven eight")]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {}
-    for mode in ("off", "local"):
-        monkeypatch.setenv("SPARK_GRAFT_PPJOIN_PREF", mode)
-        out[mode] = {tuple(r) for r in ngram_jaccard_prefix(df).collect()}
-    assert out["off"] == out["local"] and len(out["off"]) > 0
-
-
-def test_minhash_and_span_mat_knobs_agree(spark, monkeypatch):
-    """The round-8 scale-crossover materializes in minhash (signature
-    table) and span_duplicates (positional spans) are plan-only: both
-    env-knob branches must produce identical rows."""
-    from bigdata_project_hust_spark.operators.dedup import (
-        minhash_near_duplicates, span_duplicates)
+def test_minhash_sig_gate_branches_agree(spark, monkeypatch):
+    """The MinHash signature table is materialized only past the
+    shingle-count gate (a measured scale crossover), so the barrier
+    must be plan-only: forcing the materialized branch on a tiny
+    corpus (gate constant 0) returns the lazy branch's rows."""
+    from bigdata_project_hust_spark.operators import dedup
     text = "alpha beta gamma delta epsilon zeta eta theta " * 4
     rows = [(1, text), (2, text + "iota"), (3, "unrelated words only here")]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    for knob, fn in (("SPARK_GRAFT_MINHASH_SIG",
-                      lambda d: minhash_near_duplicates(d)),
-                     ("SPARK_GRAFT_SPAN_MAT",
-                      lambda d: span_duplicates(d, n=5))):
-        out = {}
-        for mode in ("off", "local"):
-            monkeypatch.setenv(knob, mode)
-            out[mode] = {tuple(r) for r in fn(df).collect()}
-        monkeypatch.delenv(knob)
-        assert out["off"] == out["local"] and len(out["off"]) > 0, knob
+    labels = []
+    real = dedup.materialize
+    monkeypatch.setattr(
+        dedup, "materialize",
+        lambda frame, label="intermediate", **kw:
+            labels.append(label) or real(frame, label, **kw))
+    out = {}
+    for gate in (dedup.MINHASH_SIG_MAT_MIN_SHINGLES, 0):
+        monkeypatch.setattr(dedup, "MINHASH_SIG_MAT_MIN_SHINGLES", gate)
+        labels.clear()
+        out[gate] = {tuple(r) for r in
+                     dedup.minhash_near_duplicates(df).collect()}
+        assert ("minhash_sig" in labels) == (gate == 0), labels
+    lazy, mat = out.values()
+    assert mat == lazy and len(lazy) > 0
 
 
 def test_hash_embedding_mass_and_determinism(spark):
@@ -2194,29 +2197,6 @@ def test_grid_radius_join_boundaries(spark):
     assert got == {(1, 2): 100, (2, 5): 100, (3, 4): 100, (1, 5): 0}
 
 
-def test_pointer_jumping_cc_matches_plain_on_path_and_forest(spark):
-    """The pointer-jumping variant must produce identical components
-    to plain min-propagation: a 25-node path (worst-case diameter —
-    pj needs ~log2(25) rounds) plus a separate triangle and an
-    isolated edge."""
-    from bigdata_project_hust_spark.operators.dedup import (
-        connected_components, connected_components_pj)
-    path = [(i, i + 1) for i in range(100, 124)]
-    tri = [(1, 2), (2, 3), (1, 3)]
-    edge = [(50, 51)]
-    pairs = spark.createDataFrame(path + tri + edge,
-                                  "doc_a long, doc_b long")
-    plain = {(r["node"], r["component"])
-             for r in connected_components(pairs).collect()}
-    pj = {(r["node"], r["component"])
-          for r in connected_components_pj(pairs).collect()}
-    assert pj == plain
-    comp = dict(pj)
-    assert all(comp[n] == 100 for n in range(100, 125))
-    assert comp[1] == comp[2] == comp[3] == 1
-    assert comp[50] == comp[51] == 50
-
-
 def test_weighted_median_hand_values(spark, tmp_path):
     """Weighted median with hand weights: values 10,20,30 with
     weights 1,1,2 → cum 1,2,4 vs total 4 → first 2·cum ≥ 4 is value
@@ -2334,59 +2314,14 @@ def test_extract_features_real_default_and_fake_seam(spark):
     assert fake[2].feature is not None  # the test seam still works
 
 
-@pytest.mark.slow_tier
-def test_jaccard_verify_strategies_agree(spark):
-    """The arrays (default) and explode verify strategies must return
-    identical rows — same pairs, same exact intersection/union."""
-    import pytest
-    from bigdata_project_hust_spark.operators import dedup
-    texts = ["the quick brown fox jumps over the lazy dog",
-             "the quick brown fox jumps over a lazy dog",
-             "entirely different words here now",
-             "the quick brown fox leaps over the lazy dog",
-             "short one", "short one two"]
-    df = spark.createDataFrame(list(enumerate(texts)),
-                               "doc_id long, text string")
-    sh = dedup.shingles(df, "text", "doc_id", 2)
-    ids = df.select("doc_id")
-    pairs = (ids.select(F.col("doc_id").alias("doc_a"))
-             .crossJoin(ids.select(F.col("doc_id").alias("doc_b")))
-             .where(F.col("doc_a") < F.col("doc_b")))
-    a = sorted(map(tuple, dedup.jaccard_verify(
-        pairs, sh, "doc_id", 3, 10, strategy="arrays").collect()))
-    e = sorted(map(tuple, dedup.jaccard_verify(
-        pairs, sh, "doc_id", 3, 10, strategy="explode").collect()))
-    assert a == e and len(a) >= 2
-    # ADVICE r5: duplicate (doc, sh) rows must not diverge the
-    # strategies — both treat shingles SET-wise, so doubling every
-    # shingle row changes nothing
-    sh_dup = sh.unionAll(sh)
-    a2 = sorted(map(tuple, dedup.jaccard_verify(
-        pairs, sh_dup, "doc_id", 3, 10, strategy="arrays").collect()))
-    e2 = sorted(map(tuple, dedup.jaccard_verify(
-        pairs, sh_dup, "doc_id", 3, 10, strategy="explode").collect()))
-    assert a2 == a and e2 == e
-    # assume_distinct=True (the internal fast path — shingles() output
-    # is provably distinct) matches the set-semantic default on
-    # distinct input, for both strategies
-    for strat in ("arrays", "explode"):
-        fast = sorted(map(tuple, dedup.jaccard_verify(
-            pairs, sh, "doc_id", 3, 10, strategy=strat,
-            assume_distinct=True).collect()))
-        assert fast == a, strat
-    with pytest.raises(ValueError, match="strategy"):
-        dedup.jaccard_verify(pairs, sh, "doc_id", 3, 10, strategy="nope")
-    with pytest.raises(ValueError, match="threshold_num"):
-        dedup.jaccard_verify(pairs, sh, "doc_id", 0, 10)
-
-
 def test_jaccard_verify_rekey_is_lossless_and_distributed(spark):
-    """rekey=True (dense integer shingle ids) must return the exact
-    rows of the string path — jaccard is invariant under a bijection —
-    for BOTH strategies, and the rank that builds the ids must be
-    PARTITIONED (round-9: the old row_number over a global orderBy was
-    a single-task sort of the whole vocabulary — the judge's last
-    single-task-sort note)."""
+    """Rekeying shingles to dense integer ids (what the n-gram Jaccard
+    kernels do before the verify) must return the exact rows of the
+    string path — jaccard is invariant under a bijection — and the
+    rank that builds the ids must be PARTITIONED (round-9: the old
+    row_number over a global orderBy was a single-task sort of the
+    whole vocabulary). A zero threshold is rejected: it would keep
+    disjoint pairs."""
     from bigdata_project_hust_spark.operators import dedup
     texts = ["the quick brown fox jumps over the lazy dog",
              "the quick brown fox jumps over a lazy dog",
@@ -2402,11 +2337,13 @@ def test_jaccard_verify_rekey_is_lossless_and_distributed(spark):
              .where(F.col("doc_a") < F.col("doc_b")))
     base = sorted(map(tuple, dedup.jaccard_verify(
         pairs, sh, "doc_id", 3, 10).collect()))
-    for strat in ("arrays", "explode"):
-        rk = dedup.jaccard_verify(pairs, sh, "doc_id", 3, 10,
-                                  strategy=strat, assume_distinct=True,
-                                  rekey=True)
-        assert sorted(map(tuple, rk.collect())) == base, strat
+    rk_sh = (sh.join(dedup.dense_ids(sh.select("sh").distinct(), "sh"),
+                     "sh")
+             .select("doc_id", F.col("__sid").alias("sh")))
+    rk = dedup.jaccard_verify(pairs, rk_sh, "doc_id", 3, 10)
+    assert sorted(map(tuple, rk.collect())) == base and len(base) >= 2
+    with pytest.raises(ValueError, match="threshold_num"):
+        dedup.jaccard_verify(pairs, sh, "doc_id", 0, 10)
     # the id assignment itself: a dense 1..n bijection built from ONE
     # range exchange — the per-partition rank is bit-ops over
     # monotonically_increasing_id on the sorted partition, so there
