@@ -155,7 +155,7 @@ def _token_windows(df: DataFrame, text_col: str, id_col: str,
     chunk_tokens and line_dedup both consume it, so a change to the
     segmentation (e.g. real newline-based lines) happens once."""
     bound = df.select(F.col(id_col),
-                                    tokens(text_col).alias("__w"))
+                      tokens(text_col).alias("__w"))
     w, n = F.col("__w"), F.size(F.col("__w"))
     starts = F.when(n > 0, F.sequence(F.lit(1), n, F.lit(stride))) \
               .otherwise(F.array().cast("array<int>"))
@@ -664,8 +664,8 @@ def boilerplate_strip(df: DataFrame, text_col: str = "text",
     corpus-sized. NULL-source docs are their own group, as in the
     mixing planner."""
     bound = df.select(F.col(id_col),
-                                    F.col(source_col).alias("src"),
-                                    tokens(text_col).alias("__w"))
+                      F.col(source_col).alias("src"),
+                      tokens(text_col).alias("__w"))
     w, n = F.col("__w"), F.size(F.col("__w"))
     starts = F.when(n > 0, F.sequence(F.lit(1), n, F.lit(line_tokens))) \
               .otherwise(F.array().cast("array<int>"))

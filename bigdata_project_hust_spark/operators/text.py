@@ -57,7 +57,7 @@ def lang_id(df: DataFrame, text_col: str = "text",
     would re-tokenize once per reference (see operators/dedup.shingles).
     """
     bound = df.select(F.col(id_col),
-                                    tokens(text_col).alias("__w"))
+                      tokens(text_col).alias("__w"))
     t = F.col("__w")
     hits = bound.select(
         F.col(id_col),
@@ -79,7 +79,7 @@ def quality_score(df: DataFrame, text_col: str = "text",
     0-100 integer score. All-integer outputs → bit-exact vs any oracle.
     """
     bound = df.select(F.col(id_col), F.col(text_col),
-                                    tokens(text_col).alias("__w"))
+                      tokens(text_col).alias("__w"))
     df, t = bound, F.col("__w")
     n_chars = F.length(text_col)
     n_tokens = F.size(t)
@@ -114,7 +114,7 @@ def doc_features(df: DataFrame, text_col: str = "text",
     quality_score + lang_id; output carries all quality columns plus
     lang_pred (per-language hit counts stay on lang_id)."""
     bound = df.select(F.col(id_col), F.col(text_col),
-                                    tokens(text_col).alias("__w"))
+                      tokens(text_col).alias("__w"))
     t = F.col("__w")
     n_chars = F.length(text_col)
     n_tokens = F.size(t)
@@ -713,7 +713,7 @@ def bigram_logprob(df: DataFrame, text_col: str = "text",
     can outgrow memory); the unigram table and total stay broadcast,
     as in tfidf/unigram. Docs with < 2 tokens score (0, 0)."""
     t = df.select(F.col(id_col),
-                                tokens(text_col).alias("__t"))
+                  tokens(text_col).alias("__t"))
     n = F.size("__t")
     m = F.greatest(n - 1, F.lit(0))
     prs = F.zip_with(F.slice("__t", 1, m), F.slice("__t", 2, m),
@@ -1163,7 +1163,7 @@ def readability(df: DataFrame, text_col: str = "text",
     token array binds once."""
     toks = tokens(F.col(text_col))
     d = df.select(id_col, F.col(text_col).alias("_txt"),
-                                toks.alias("_w"))
+                  toks.alias("_w"))
     n_words = F.size("_w").cast("long")
     n_sent = F.greatest(
         F.lit(1),
@@ -1379,7 +1379,7 @@ def kwic(df: DataFrame, term: str = "the", width: int = 2,
     codegen; both engines share identical 1-based index arithmetic
     (Spark array_position = DuckDB list_position)."""
     t = df.select(id_col,
-                                tokens(F.col(text_col)).alias("_w"))
+                  tokens(F.col(text_col)).alias("_w"))
     pos = F.array_position("_w", term)
     start = F.greatest(F.lit(1), pos - width)
     fin = F.least(F.size("_w").cast("long"), pos + width)

@@ -29,6 +29,7 @@ from __future__ import annotations
 import os
 import tempfile
 
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
 from ..functions.scalar import influence_score, rewrite_values
@@ -98,6 +99,48 @@ def q_multimodal_curation_stream(spark, sf_dir):
                                 spark.read.parquet(sink_aud))
 
 
+def _stream_failed(ex: Exception) -> bool:
+    """A query that died with ``STREAM_FAILED``; the message substring
+    is the fallback for an error that carries no condition."""
+    if isinstance(ex, StreamingQueryException):
+        return ex.getCondition() == "STREAM_FAILED"
+    return "connect back" in str(ex)
+
+
+def _process_all_with_retry(start, attempts: int = 3) -> None:
+    """Run ``start()``'s query to completion, restarting it after a
+    stream failure.
+
+    The Python streaming source spawns a dedicated worker process, and
+    Spark 4.1's connect-back wait is a HARD-CODED 10 s
+    (Selector.select(10000L) in PythonWorkerFactory — the
+    spark.python.authenticate.socketTimeout conf does not govern it,
+    which is why the r10 session-conf mitigation never worked, in any
+    session).  Under heavy external host load the spawn can miss that
+    window and the query dies at INITIALIZING with STREAM_FAILED
+    "Python worker failed to connect back" (CORRECTNESS_r10's one red
+    row, in the driver's own session).  A restart from the checkpoint
+    is exactly-once safe whatever failed the stream (the parquet sink
+    is manifest-logged), so every STREAM_FAILED is retried and a
+    deterministic one is re-raised after the last attempt; any other
+    error is re-raised at once.  A failing ``stop()`` never replaces
+    the query's own error."""
+    for attempt in range(attempts):
+        q = start()
+        try:
+            q.processAllAvailable()
+        except Exception as ex:
+            try:
+                q.stop()
+            except Exception as stop_ex:  # noqa: BLE001 — noted on ex
+                ex.add_note(f"query.stop() also failed: {stop_ex!r}")
+            if attempt + 1 == attempts or not _stream_failed(ex):
+                raise
+        else:
+            q.stop()
+            return
+
+
 def q_kafka_consumer1_roundtrip(spark, sf_dir):
     """S4/ST1 as a DRIVER-ORACLED query: the customer table is landed
     as a 4-partition Kafka-shaped topic log by the distributed producer
@@ -134,37 +177,11 @@ def q_kafka_consumer1_roundtrip(spark, sf_dir):
               .where(F.col("influence_score") >= 50)
               .select("c_custkey", "c_name", "influence_score"))
     out_dir = os.path.join(work, "out")
-    # The Python streaming source spawns a dedicated worker process,
-    # and Spark 4.1's connect-back wait is a HARD-CODED 10 s
-    # (Selector.select(10000L) in PythonWorkerFactory — the
-    # spark.python.authenticate.socketTimeout conf does not govern it,
-    # which is why the r10 session-conf mitigation never worked, in
-    # any session).  Under heavy external host load the spawn can
-    # miss that window and the query dies at INITIALIZING with
-    # STREAM_FAILED "Python worker failed to connect back"
-    # (CORRECTNESS_r10's one red row, in the driver's own session).
-    # The failure is pre-offset-commit and the parquet sink is
-    # manifest-logged, so restarting from the checkpoint is
-    # exactly-once safe — retry the start, which is the only
-    # session-independent fix available.
-    last_ex: Exception | None = None
-    for _ in range(3):
-        q = (scored.writeStream.format("parquet")
-             .option("path", out_dir)
-             .option("checkpointLocation", os.path.join(work, "ckpt"))
-             .start())
-        try:
-            q.processAllAvailable()
-            last_ex = None
-            break
-        except Exception as ex:  # noqa: BLE001 — retry the one known
-            last_ex = ex         # transient spawn failure, re-raise rest
-            if "connect back" not in str(ex):
-                raise
-        finally:
-            q.stop()
-    if last_ex is not None:
-        raise last_ex
+    _process_all_with_retry(
+        lambda: scored.writeStream.format("parquet")
+        .option("path", out_dir)
+        .option("checkpointLocation", os.path.join(work, "ckpt"))
+        .start())
     return spark.read.parquet(out_dir)
 
 

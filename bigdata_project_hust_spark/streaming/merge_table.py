@@ -8,12 +8,17 @@ wrong at 100 TB), ``MergeIntoParquetTable`` implements the
 Delta/Iceberg ``MERGE INTO`` shape without the table-format dependency
 (not installable in this sandbox):
 
-* data lives in ``n_buckets`` hash buckets of the merge key
-  (``stable_hash64`` — deterministic), each bucket a versioned
-  directory ``b{k}/v{n}``;
+* rows are assigned to ``n_buckets`` hash buckets of the merge key
+  (``stable_hash64`` — deterministic); the manifest maps each bucket
+  to the segment that holds its current rows;
 * a MERGE reads and rewrites ONLY the buckets that contain source
-  keys — untouched buckets carry over in the manifest by reference,
-  zero I/O (the analogue of Delta's file-level pruning on a merge);
+  keys, and writes their merged rows as ONE new parquet segment
+  ``seg-v{n}`` (a plain write: rows carry ``__bucket`` and ``__v = n``,
+  sorted by bucket within each file). Untouched buckets keep their
+  pointer and their segment's files stay in place, zero I/O — the
+  analogue of Delta's file-level pruning on a merge;
+* a snapshot read is one scan of the distinct segments its buckets
+  point at, keeping a row only when ``__v`` is its bucket's pointer;
 * the commit is one atomic manifest swap (``os.replace``), so readers
   always see a consistent snapshot and a crash never leaves a
   half-merged table — identical protocol to ``KeyedParquetStore``,
@@ -28,13 +33,20 @@ the expr may reference ``t_<col>`` (target) and ``s_<col>`` (source),
 e.g. ``{"cnt": "t_cnt + s_cnt"}`` for the $inc merge;
 ``when_not_matched`` = ``"insert"`` or ``"ignore"``.
 
-The single driver-side action per merge is collecting the DISTINCT
-touched bucket ids — metadata-scale (≤ n_buckets rows), the same class
-of driver work as a table format reading its file index. Note the
-honest caveat shared with Delta: a uniformly-hashed source touching
+The source is read once per merge: it is cached, and one aggregation
+over it both fills the cache and returns the NULL-key count and the
+touched bucket ids (metadata-scale, <= n_buckets values). The buckets
+a merge empties are observed on the write job itself.
+
+Caveats shared with Delta: a uniformly-hashed source touching
 >> n_buckets keys rewrites most buckets; clustering the key space
 (bucket = range of a sort key) is the layout fix, orthogonal to the
-merge protocol.
+merge protocol. And space amplification: a segment stays on disk
+while any retained snapshot has one bucket pointing at it, so many
+sparse merges leave a snapshot spanning many small, mostly-superseded
+segments — ``compact(n)`` rewrites the buckets of every segment of
+more than ``n`` files into one new segment, and the old ones go once
+no retained snapshot points at them.
 """
 
 from __future__ import annotations
@@ -43,7 +55,7 @@ import json
 import os
 import shutil
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 
 from ..functions.scalar import stable_hash64
 
@@ -74,22 +86,19 @@ class MergeIntoParquetTable:
         return F.pmod(stable_hash64(F.col(self.key).cast("string")),
                       F.lit(self.n_buckets)).cast("long")
 
-    def _bucket_path(self, b: int, v: int) -> str:
-        return os.path.join(self.path, f"b{int(b)}", f"v{int(v)}")
+    def _seg_path(self, v: int) -> str:
+        return os.path.join(self.path, f"seg-v{int(v)}")
 
     def read(self, version: int | None = None) -> DataFrame | None:
-        """Snapshot read (no bucket column), or None if empty.
+        """Snapshot read (no internal columns), or None if empty.
 
         ``version=None`` reads the current snapshot; an integer reads
         that historical snapshot (time travel) as long as its manifest
-        and bucket files are still retained (``vacuum`` keeps
+        and segments are still retained (``vacuum`` keeps
         ``retain_versions`` history)."""
         st = self._state() if version is None else self._version_state(
             version)
-        if not st["buckets"]:
-            return None
-        paths = [self._bucket_path(b, v) for b, v in st["buckets"].items()]
-        return self.spark.read.parquet(*paths)
+        return self._read_buckets(st, [int(b) for b in st["buckets"]])
 
     def _version_state(self, version: int) -> dict:
         p = os.path.join(self.path, f"_manifest-v{version}.json")
@@ -105,8 +114,7 @@ class MergeIntoParquetTable:
         changed key with change_type I/U/D plus every current column —
         the Delta CDF / Iceberg changelog analogue, derived rather than
         stored (no extra write-path cost; the price is reading both
-        snapshots, which bucket pruning keeps to the touched buckets'
-        files). Composition: time-travel read(v_from) vs read(v_to)
+        snapshots). Composition: time-travel read(v_from) vs read(v_to)
         through :func:`operators.joins.snapshot_diff` — key + 8-byte
         fingerprints shuffle, never full rows; with both snapshots
         hash-bucketed on the table key (they are — same table), a
@@ -123,22 +131,24 @@ class MergeIntoParquetTable:
     def history(self) -> list[dict]:
         """Retained snapshots, oldest first: version, bucket count,
         epoch count — the table-format DESCRIBE HISTORY analogue."""
-        out = []
-        for entry in sorted(os.listdir(self.path)):
-            if entry.startswith("_manifest-v") and entry.endswith(".json"):
-                with open(os.path.join(self.path, entry)) as f:
-                    st = json.load(f)
-                out.append({"version": st["version"],
-                            "n_buckets": len(st["buckets"]),
-                            "n_epochs": len(st["epochs"])})
-        return sorted(out, key=lambda d: d["version"])
+        return [{"version": st["version"], "n_buckets": len(st["buckets"]),
+                 "n_epochs": len(st["epochs"])}
+                for st in self._retained_states()]
 
     def _read_buckets(self, st: dict, buckets: list[int]) -> DataFrame | None:
-        paths = [self._bucket_path(b, st["buckets"][str(b)])
-                 for b in buckets if str(b) in st["buckets"]]
-        if not paths:
+        """Rows of ``buckets`` in snapshot ``st``: one scan of the
+        segments they point at, keeping each row only where ``__v`` is
+        its bucket's pointer (a segment also holds rows that later
+        merges superseded, and rows of other buckets)."""
+        ptr = {int(b): st["buckets"][str(b)] for b in buckets
+               if str(b) in st["buckets"]}
+        if not ptr:
             return None
-        return self.spark.read.parquet(*paths)
+        pairs = ", ".join(f"{b}, {v}" for b, v in ptr.items())
+        return (self.spark.read.parquet(
+            *[self._seg_path(v) for v in sorted(set(ptr.values()))])
+            .where(f"__v = element_at(map({pairs}), __bucket)")
+            .drop("__bucket", "__v"))
 
     # -- commit protocol ------------------------------------------------
     def _commit(self, st: dict, new_buckets: dict[str, int],
@@ -170,10 +180,10 @@ class MergeIntoParquetTable:
         return sorted(out, key=lambda s: s["version"])
 
     def _gc_history(self) -> None:
-        """Drop manifests beyond the retention window, then remove
-        bucket version dirs no retained snapshot references
-        (best-effort — readers of a just-expired snapshot may race,
-        same caveat as any table format's VACUUM)."""
+        """Drop manifests beyond the retention window, then remove the
+        segments no retained snapshot references (best-effort — readers
+        of a just-expired snapshot may race, same caveat as any table
+        format's VACUUM)."""
         states = self._retained_states()
         for st in states[:-self.retain_versions]:
             p = os.path.join(self.path, f"_manifest-v{st['version']}.json")
@@ -181,76 +191,74 @@ class MergeIntoParquetTable:
                 os.remove(p)
             except OSError:
                 pass
-        live = {self._bucket_path(b, v)
-                for st in self._retained_states()
-                for b, v in st["buckets"].items()}
+        self._remove_dead_segments(states[-self.retain_versions:])
+
+    def _remove_dead_segments(self, states: list[dict]) -> int:
+        """Remove every segment no snapshot in ``states`` points at (a
+        segment is live while one retained bucket points at it)."""
+        live = {self._seg_path(v)
+                for st in states for v in st["buckets"].values()}
+        removed = 0
         for entry in os.listdir(self.path):
             full = os.path.join(self.path, entry)
-            if entry.startswith("b") and os.path.isdir(full):
-                for vdir in os.listdir(full):
-                    vfull = os.path.join(full, vdir)
-                    if vfull not in live:
-                        shutil.rmtree(vfull, ignore_errors=True)
+            if entry.startswith("seg-v") and full not in live:
+                shutil.rmtree(full, ignore_errors=True)
+                removed += 1
+        return removed
 
     def _write_touched(self, out: DataFrame, touched: list[int],
                        new_v: int) -> dict[str, int]:
-        """Write merged rows for the touched buckets in ONE Spark job
-        (partitionBy on the bucket id into a staging dir), then move
-        each bucket's files to its versioned directory. Buckets with
-        zero surviving rows map to -1 (deleted)."""
-        stage = os.path.join(self.path, f".stage-v{new_v}")
-        shutil.rmtree(stage, ignore_errors=True)
+        """Write the merged rows of the touched buckets as segment
+        ``new_v`` in ONE plain parquet write. Buckets with zero
+        surviving rows map to -1 (deleted); the write job itself
+        observes which buckets it wrote."""
+        seen = Observation()
         (out.withColumn("__bucket", self._bucket_col())
-            .write.mode("overwrite").partitionBy("__bucket")
-            .parquet(stage))
-        new_buckets: dict[str, int] = {}
-        for b in touched:
-            src_dir = os.path.join(stage, f"__bucket={b}")
-            if os.path.isdir(src_dir):
-                dst = self._bucket_path(b, new_v)
-                os.makedirs(os.path.dirname(dst), exist_ok=True)
-                shutil.rmtree(dst, ignore_errors=True)
-                os.replace(src_dir, dst)
-                new_buckets[str(b)] = new_v
-            else:
-                new_buckets[str(b)] = -1  # all rows deleted
-        shutil.rmtree(stage, ignore_errors=True)
-        return new_buckets
+            .withColumn("__v", F.lit(new_v))
+            .sortWithinPartitions("__bucket")
+            .observe(seen, F.collect_set("__bucket").alias("b"))
+            .write.mode("overwrite").parquet(self._seg_path(new_v)))
+        written = set(seen.get["b"])
+        return {str(b): new_v if b in written else -1 for b in touched}
 
     # -- MERGE ----------------------------------------------------------
     def merge(self, source: DataFrame,
               when_matched: str | dict[str, str] = "replace",
               when_not_matched: str = "insert",
               epoch_id: int | None = None) -> None:
-        if epoch_id is not None and epoch_id in self._state()["epochs"]:
-            return
         st = self._state()
-        new_v = st["version"] + 1
-        # NULL merge keys are rejected up front: stable_hash64(NULL) is
-        # NULL, so a null key has no bucket (the distinct-bucket collect
-        # would yield None and crash the sort) and could never match in
-        # the full_outer merge — surfacing it beats silently dropping.
-        src = source.dropDuplicates([self.key])
-        n_null = src.filter(F.col(self.key).isNull()).limit(1).count()
-        if n_null:
-            raise ValueError(
-                f"merge source contains NULL '{self.key}' rows; "
-                "filter them out (a NULL key has no bucket and can "
-                "never match a target row)")
-        # the one driver-side action: DISTINCT touched bucket ids
-        # (metadata-scale, <= n_buckets values)
-        touched = sorted(
-            r[0] for r in src.select(self._bucket_col().alias("b"))
-            .distinct().collect())
-        tgt = self._read_buckets(st, touched)
-        if tgt is None:
-            out = src if when_not_matched == "insert" else \
-                src.limit(0)
-        else:
-            out = self._merge_frames(tgt, src, when_matched,
-                                     when_not_matched)
-        new_buckets = self._write_touched(out, touched, new_v)
-        self._commit(st, new_buckets, epoch_id)
+        if epoch_id is not None and epoch_id in st["epochs"]:
+            return
+        # the source is read ONCE: cached, and the one aggregation
+        # below fills the cache while returning the NULL-key count and
+        # the DISTINCT touched bucket ids (metadata-scale)
+        cached = (source.dropDuplicates([self.key])
+                  .withColumn("__bucket", self._bucket_col()).persist())
+        try:
+            n_null, touched = cached.agg(
+                F.count_if(F.col(self.key).isNull()),
+                F.sort_array(F.collect_set("__bucket"))).first()
+            # NULL merge keys are rejected up front: stable_hash64(NULL)
+            # is NULL, so a null key has no bucket and could never match
+            # in the full_outer merge — surfacing it beats dropping it.
+            if n_null:
+                raise ValueError(
+                    f"merge source contains NULL '{self.key}' rows; "
+                    "filter them out (a NULL key has no bucket and can "
+                    "never match a target row)")
+            src = cached.drop("__bucket")
+            tgt = self._read_buckets(st, touched)
+            if tgt is None:
+                out = src if when_not_matched == "insert" else \
+                    src.limit(0)
+            else:
+                out = self._merge_frames(tgt, src, when_matched,
+                                         when_not_matched)
+            new_buckets = self._write_touched(out, touched,
+                                              st["version"] + 1)
+            self._commit(st, new_buckets, epoch_id)
+        finally:
+            cached.unpersist()
 
     def _merge_frames(self, tgt: DataFrame, src: DataFrame,
                       when_matched: str | dict[str, str],
@@ -284,47 +292,33 @@ class MergeIntoParquetTable:
 
     # -- maintenance ----------------------------------------------------
     def compact(self, max_files_per_bucket: int = 1) -> None:
-        """Rewrite any bucket whose data spans more than
-        ``max_files_per_bucket`` parquet files into a single-file new
-        version — content unchanged, manifest bumped atomically. The
-        small-files remedy a streaming upsert workload needs
-        periodically (SURVEY §7.3)."""
+        """Rewrite every bucket whose segment spans more than
+        ``max_files_per_bucket`` parquet files into one new segment of
+        at most that many files — content unchanged, manifest bumped
+        atomically, so a second call is a no-op. The small-files remedy
+        a streaming upsert workload needs periodically (SURVEY §7.3),
+        and the cure for a snapshot spread over many sparse segments
+        (each merge writes one file per write task)."""
         st = self._state()
-        new_v = st["version"] + 1
-        to_compact = []
-        for b, v in st["buckets"].items():
-            d = self._bucket_path(b, v)
-            n = len([f for f in os.listdir(d) if f.endswith(".parquet")])
-            if n > max_files_per_bucket:
-                to_compact.append(int(b))
+        n_files = {v: len([f for f in os.listdir(self._seg_path(v))
+                           if f.endswith(".parquet")])
+                   for v in set(st["buckets"].values())}
+        to_compact = [int(b) for b, v in st["buckets"].items()
+                      if n_files[v] > max_files_per_bucket]
         if not to_compact:
             return
         # hash-repartition on the bucket id: every bucket's rows land
-        # in one task, so the partitionBy write emits one file each
+        # in one task, so each bucket lands in one output file
         df = (self._read_buckets(st, to_compact)
-              .repartition(len(to_compact), self._bucket_col()))
-        new_buckets = self._write_touched(df, to_compact, new_v)
+              .repartition(max_files_per_bucket, self._bucket_col()))
+        new_buckets = self._write_touched(df, to_compact, st["version"] + 1)
         self._commit(st, new_buckets, None)
 
     def vacuum(self) -> int:
-        """Remove orphaned (superseded / crashed-stage) directories not
+        """Remove orphaned (superseded / crashed-write) segments not
         referenced by ANY retained snapshot. Returns count removed."""
-        states = self._retained_states() or [self._state()]
-        live = {self._bucket_path(b, v)
-                for st in states for b, v in st["buckets"].items()}
-        removed = 0
-        for entry in os.listdir(self.path):
-            full = os.path.join(self.path, entry)
-            if entry.startswith(".stage-"):
-                shutil.rmtree(full, ignore_errors=True)
-                removed += 1
-            elif entry.startswith("b") and os.path.isdir(full):
-                for vdir in os.listdir(full):
-                    vfull = os.path.join(full, vdir)
-                    if vfull not in live:
-                        shutil.rmtree(vfull, ignore_errors=True)
-                        removed += 1
-        return removed
+        return self._remove_dead_segments(
+            self._retained_states() or [self._state()])
 
     # -- foreachBatch adapters ------------------------------------------
     def upsert_replace(self, batch: DataFrame,

@@ -342,3 +342,60 @@ def test_restart_mid_stream_exactly_once(spark, tmp_path):
     assert got.count() == 60, "rows lost or duplicated across restart"
     assert (got.select("topic", "partition", "offset").distinct().count()
             == 60)
+
+
+class _StubQuery:
+    """A started query whose run raises ``errors`` in turn (then
+    succeeds) and whose first ``stop()`` raises."""
+
+    def __init__(self, errors: list[Exception]):
+        self.errors = errors
+        self.stops = 0
+
+    def processAllAvailable(self):
+        if self.errors:
+            raise self.errors.pop(0)
+
+    def stop(self):
+        self.stops += 1
+        if self.stops == 1:
+            raise RuntimeError("stop failed: session torn down")
+
+
+def test_stream_start_retry_survives_failing_stop():
+    """consumer1 round trip's stream-start retry: a STREAM_FAILED (or,
+    with no condition, a connect-back message) restarts the query even
+    when ``stop()`` raises; any other error is re-raised on the first
+    attempt, never replaced by the ``stop()`` error."""
+    from pyspark.errors import StreamingQueryException
+
+    from bigdata_project_hust_spark.plans.round23 import (
+        _process_all_with_retry)
+
+    class _StreamFailed(StreamingQueryException):
+        def getCondition(self):
+            return "STREAM_FAILED"
+
+    for transient in (_StreamFailed("Python worker failed to connect"),
+                      RuntimeError("Python worker failed to connect back")):
+        q = _StubQuery([transient])
+        starts = []
+
+        def start():
+            starts.append(1)
+            return q
+
+        _process_all_with_retry(start)
+        assert len(starts) == 2 and q.stops == 2
+
+    q = _StubQuery([ValueError("bad record")])
+    starts = []
+    with pytest.raises(ValueError, match="bad record") as ei:
+        _process_all_with_retry(lambda: starts.append(1) or q)
+    assert len(starts) == 1 and q.stops == 1
+    assert "stop failed" in "".join(ei.value.__notes__)
+
+    q = _StubQuery([_StreamFailed("boom") for _ in range(3)])
+    with pytest.raises(_StreamFailed, match="boom"):
+        _process_all_with_retry(lambda: q, attempts=3)
+    assert q.stops == 3

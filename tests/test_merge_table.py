@@ -4,7 +4,6 @@ semantics from consumer2.py Mongo bulk upserts)."""
 
 from __future__ import annotations
 
-import glob
 import json
 import os
 
@@ -19,6 +18,13 @@ def _mk(spark, tmp_path, rows, n_buckets=8):
                               n_buckets=n_buckets)
     t.merge(spark.createDataFrame(rows, "k long, v long, s string"))
     return t
+
+
+def _seg_files(t, v):
+    """Parquet file name -> size of segment ``v``."""
+    d = t._seg_path(v)
+    return {f: os.path.getsize(os.path.join(d, f))
+            for f in os.listdir(d) if f.endswith(".parquet")}
 
 
 def _rows(t):
@@ -54,22 +60,31 @@ def test_merge_delete_and_ignore_unmatched(spark, tmp_path):
 
 def test_merge_rewrites_only_touched_buckets(spark, tmp_path):
     """The table-format property: a merge leaves untouched buckets'
-    files byte-identical in place (pruned, not rewritten)."""
+    pointers and their segment's files byte-identical in place (pruned,
+    not rewritten), and its new segment holds only the source's
+    buckets."""
     rows = [(k, k, f"r{k}") for k in range(60)]
     t = _mk(spark, tmp_path, rows, n_buckets=16)
     st0 = t._state()
-    before = {b: t._bucket_path(b, v) for b, v in st0["buckets"].items()}
-    t.merge(spark.createDataFrame([(1, 111, "upd")],
-                                  "k long, v long, s string"))
+    files0 = {v: _seg_files(t, v) for v in set(st0["buckets"].values())}
+    src = spark.createDataFrame([(1, 111, "upd")],
+                                "k long, v long, s string")
+    t.merge(src)
     st1 = t._state()
-    changed = [b for b in before
+    changed = [b for b in st0["buckets"]
                if st1["buckets"].get(b) != st0["buckets"][b]]
-    unchanged = [b for b in before
+    unchanged = [b for b in st0["buckets"]
                  if st1["buckets"].get(b) == st0["buckets"][b]]
     assert len(changed) == 1          # exactly the source key's bucket
-    assert len(unchanged) == len(before) - 1
-    for b in unchanged:               # same version dir still on disk
-        assert os.path.isdir(before[b])
+    assert len(unchanged) == len(st0["buckets"]) - 1
+    for b in unchanged:               # same files, same sizes on disk
+        v = st0["buckets"][b]
+        assert _seg_files(t, v) == files0[v]
+    seg_buckets = {r[0] for r in spark.read.parquet(
+        t._seg_path(st1["version"])).select("__bucket").distinct()
+        .collect()}
+    src_buckets = {r[0] for r in src.select(t._bucket_col()).collect()}
+    assert seg_buckets <= src_buckets
     assert _rows(t)[1] == (111, "upd")
 
 
@@ -132,15 +147,14 @@ def test_compact_rewrites_multifile_bucket(spark, tmp_path):
         spark.conf.set("spark.sql.adaptive.enabled", "true")
         spark.conf.set("spark.sql.shuffle.partitions", "32")
     st = t._state()
-    d = t._bucket_path(0, st["buckets"]["0"])
-    n_before = len(glob.glob(os.path.join(d, "*.parquet")))
-    assert n_before > 1
+    assert len(_seg_files(t, st["buckets"]["0"])) > 1
     before = _rows(t)
     t.compact(max_files_per_bucket=1)
     st2 = t._state()
-    d2 = t._bucket_path(0, st2["buckets"]["0"])
-    assert len(glob.glob(os.path.join(d2, "*.parquet"))) == 1
+    assert len(_seg_files(t, st2["buckets"]["0"])) == 1
     assert _rows(t) == before
+    t.compact(max_files_per_bucket=1)    # already compact: no-op
+    assert t._state()["version"] == st2["version"]
 
 
 def test_foreachbatch_stream_sink(spark, tmp_path):
@@ -240,3 +254,128 @@ def test_merge_rejects_null_key_rows(spark, tmp_path):
         t.merge(bad)
     # the failed merge must not have committed anything
     assert _rows(t) == {1: (10, "a")}
+
+
+def _apply(model, rows, when_matched, when_not_matched):
+    """Python reference for one MERGE over a {k: (v, s)} dict."""
+    out = dict(model)
+    for k, v, s in rows:
+        if k not in out:
+            if when_not_matched == "insert":
+                out[k] = (v, s)
+        elif when_matched == "delete":
+            del out[k]
+        elif when_matched == "replace":
+            out[k] = (v, s)
+        else:                            # the update set below
+            out[k] = (out[k][0] + v, max(out[k][1], s))
+    return out
+
+
+def test_merge_sequence_matches_dict_model(spark, tmp_path):
+    """Seeded sparse merges mixing every clause: after each one the
+    current snapshot, every retained snapshot and the change feed
+    across the retained window equal a dict model, while snapshots
+    span several segments and some buckets are emptied; vacuum then
+    removes nothing a retained snapshot reads."""
+    import random
+
+    rng = random.Random(3)
+    keys = list(range(24))
+    t = MergeIntoParquetTable(spark, str(tmp_path / "tbl"), "k",
+                              n_buckets=8, retain_versions=4)
+    bucket = {r[0]: r[1] for r in spark.createDataFrame(
+        [(k,) for k in keys], "k long").select("k", t._bucket_col())
+        .collect()}
+    inc = {"v": "t_v + s_v", "s": "greatest(t_s, s_s)"}
+    clauses = [("replace", "insert"), ("delete", "ignore"),
+               (inc, "insert"), ("replace", "ignore"),
+               ("delete", "insert"), (inc, "ignore")]
+    models = {}
+
+    def step(rows, when_matched, when_not_matched):
+        t.merge(spark.createDataFrame(rows, "k long, v long, s string"),
+                when_matched, when_not_matched)
+        v = t._state()["version"]
+        models[v] = _apply(models.get(v - 1, {}), rows, when_matched,
+                           when_not_matched)
+        assert _rows(t) == models[v]
+        retained = [h["version"] for h in t.history()]
+        assert retained == list(range(max(1, v - 3), v + 1))
+        for rv in retained:
+            got = {r["k"]: (r["v"], r["s"])
+                   for r in t.read(version=rv).collect()}
+            assert got == models[rv], rv
+        old, new = models[retained[0]], models[v]
+        want = {k: "I" if k not in old else "D" if k not in new else "U"
+                for k in old.keys() | new.keys()
+                if old.get(k) != new.get(k)}
+        if len(retained) > 1:
+            feed = t.change_feed(retained[0], v)
+            assert {r["k"]: r["change_type"]
+                    for r in feed.collect()} == want
+
+    step([(k, k, f"s{k}") for k in keys], "replace", "insert")
+    emptied = bucket[5]
+    for i in range(8):
+        if i == 2:                       # empty one bucket outright
+            rows = [(k, 0, "x") for k in keys if bucket[k] == emptied]
+            clause = ("delete", "ignore")
+        else:
+            rows = [(k, rng.randrange(100), rng.choice("abcxyz"))
+                    for k in rng.sample(keys, rng.randint(1, 4))]
+            clause = clauses[i % len(clauses)]
+        step(rows, *clause)
+        if i == 2:
+            assert str(emptied) not in t._state()["buckets"]
+    st = t._state()
+    assert len(set(st["buckets"].values())) > 1   # spans segments
+    live = {t._seg_path(v) for h in t.history()
+            for v in t._version_state(h["version"])["buckets"].values()}
+    t.vacuum()
+    assert all(os.path.isdir(p) for p in live)
+    for h in t.history():
+        assert {r["k"]: (r["v"], r["s"])
+                for r in t.read(version=h["version"]).collect()} \
+            == models[h["version"]]
+
+
+def test_foreachbatch_merge_reads_each_microbatch_once(spark, tmp_path):
+    """The merge reads its source once: over the kafka_shaped source,
+    every trigger's numInputRows equals the records in its offset
+    range (a count()/collect() on the batch frame would multiply it)."""
+    from bigdata_project_hust_spark.sources import (append_records,
+                                                    create_topic)
+    from bigdata_project_hust_spark.streaming.pipeline import (
+        kafka_shaped_stream)
+
+    root = str(tmp_path / "log")
+    create_topic(root, "users", partitions=2)
+    t = MergeIntoParquetTable(spark, str(tmp_path / "tbl"), "k",
+                              n_buckets=4)
+    parsed = kafka_shaped_stream(spark, root, "users",
+                                 "k long, v long, s string")
+    q = (parsed.select("k", "v", "s").writeStream
+         .foreachBatch(lambda b, e: t.upsert_replace(b, epoch_id=e))
+         .option("checkpointLocation", str(tmp_path / "ckpt")).start())
+    try:
+        for lo in (0, 10):                     # two triggers with data
+            append_records(root, "users", [
+                (str(k), json.dumps({"k": k, "v": k, "s": "x"}))
+                for k in range(lo, lo + 10)])
+            q.processAllAvailable()
+        progress = [json.loads(p.json) for p in q.recentProgress]
+    finally:
+        q.stop()
+
+    def records(p):
+        src = p["sources"][0]
+        start = (src.get("startOffset") or {}).get("users", {})
+        return sum(int(hi) - int(start.get(part, 0)) for part, hi in
+                   (src.get("endOffset") or {}).get("users", {}).items())
+
+    assert [p["numInputRows"] for p in progress] == \
+        [records(p) for p in progress]
+    assert sum(p["numInputRows"] for p in progress) == 20
+    assert len([p for p in progress if p["numInputRows"]]) == 2
+    assert _rows(t) == {k: (k, "x") for k in range(20)}
