@@ -36,14 +36,40 @@ from ..checkpoint import materialize
 EMB_DIM = 64
 
 
-def _reshape(col, dim: int):
-    """(n, dim) float32 matrix from an Arrow list column — validates
-    the fixed width instead of trusting it."""
+def vector_widths(col):
+    """Per-vector width of an Arrow list column, -1 for a NULL vector or
+    one holding a NULL component."""
     import numpy as np
-    vals = np.asarray(col.flatten(), dtype="float32")
-    if vals.size != len(col) * dim:
-        raise ValueError(f"expected uniform {dim}-dim vectors")
-    return vals.reshape(len(col), dim)
+    import pyarrow.compute as pc
+    widths = pc.list_value_length(col).fill_null(-1).to_numpy() \
+        .astype(np.int64)
+    vals = col.flatten()
+    if vals.null_count:
+        parent = pc.list_parent_indices(col).to_numpy()
+        widths[parent[pc.is_null(vals).to_numpy(zero_copy_only=False)]] = -1
+    return widths
+
+
+def width_error(widths, dim: int) -> ValueError:
+    """The error for invalid vectors: every width seen, -1 as NULL."""
+    seen = ", ".join("NULL" if w < 0 else str(w) for w in sorted(set(widths)))
+    return ValueError(
+        f"embedding vectors must all be {dim} wide with no NULL vector or "
+        f"component; widths seen: [{seen}]")
+
+
+def vector_matrix(col, dim: int | None = None):
+    """(n, dim) float64 matrix from an Arrow list column — validates
+    every vector instead of trusting the width: a NULL vector, a NULL
+    component or a width other than ``dim`` (``None``: the widest
+    vector's) raises ``ValueError`` naming the widths seen."""
+    import numpy as np
+    widths = vector_widths(col)
+    if dim is None:
+        dim = int(widths.max()) if len(widths) else 0
+    if (widths != dim).any():
+        raise width_error(widths, dim)
+    return col.flatten().to_numpy().astype(np.float64).reshape(len(col), dim)
 
 
 def embedding_norms(df: DataFrame, dim: int = EMB_DIM) -> DataFrame:
@@ -58,9 +84,8 @@ def embedding_norms(df: DataFrame, dim: int = EMB_DIM) -> DataFrame:
         import pyarrow as pa
         for b in it:
             ids = b.column(b.schema.get_field_index("vec_id"))
-            m = _reshape(
-                b.column(b.schema.get_field_index("embedding")),
-                dim).astype("float64")
+            m = vector_matrix(
+                b.column(b.schema.get_field_index("embedding")), dim)
             acc = np.zeros(m.shape[0], dtype="float64")
             for d in range(dim):                 # sequential over dims
                 acc = acc + m[:, d] * m[:, d]
@@ -92,7 +117,7 @@ def label_centroids(df: DataFrame, dim: int = EMB_DIM) -> DataFrame:
         import pyarrow as pa
         label = table.column("label")[0].as_py()
         col = table.column("embedding").combine_chunks()
-        m = _reshape(col, dim).astype("float64")
+        m = vector_matrix(col, dim)
         q = np.floor(m * 1e6).astype("int64")    # quantize BEFORE sum
         sums = q.sum(axis=0)
         n = np.int64(m.shape[0])

@@ -6,10 +6,24 @@ brute force is a full scan per query (fine for few queries, since it is
 embarrassingly parallel and TakeOrderedAndProject keeps only k rows per
 partition), while LSH turns it into a bucket-join.
 
-All arithmetic is double-precision column expressions
-(zip_with + aggregate) — no UDF, no collect. Hyperplanes for LSH are
-derived from the md5-based stable hash so they are deterministic and
-reproducible by the oracle.
+Most arithmetic is double-precision column expressions (zip_with +
+aggregate, left-to-right folds). Hyperplanes for LSH are derived from
+the md5-based stable hash so they are deterministic and reproducible
+by the oracle.
+
+Three hot paths are Arrow kernels instead, each bit-equal to the
+column form it replaced (numpy repeats the same IEEE op tree: the
+``_dot``/``_norm`` folds as d vectorized multiply-adds, then
+``floor(dot / (na·nb) · 1e6)``; k-means is exact int64 on the
+``floor(x · 2^20)`` grid):
+
+* :func:`_sampled_cosine_pairs` — ``mapInPandas`` anchor-block cosine
+  against one collected, broadcast anchor matrix;
+* flat :func:`kmeans_assign` — one seed collect, then per round one
+  ``mapInArrow`` pass whose partial sums ``treeAggregate`` merges on
+  the driver (k × dim longs), and a map-only final assignment;
+* :func:`semantic_dedup`'s verify — one ``applyInArrow`` call per
+  (cluster, code) group.
 """
 
 from __future__ import annotations
@@ -18,7 +32,8 @@ import math
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from ..checkpoint import materialize
+from .arrowops import vector_matrix, vector_widths, width_error
+
 
 def _dot(a: Column, b: Column) -> Column:
     """Σ aᵢ·bᵢ in double precision, sequential fold (deterministic).
@@ -366,47 +381,141 @@ def routed_candidates(vq: DataFrame, cent: DataFrame, k: int,
                           _sq_dist_cols("vq", "cq").alias("dist")))
 
 
-def kmeans_assign(df: DataFrame, k: int = 8, iters: int = 2,
-                  id_col: str = "vec_id",
-                  vec_col: str = "embedding",
-                  nprobe: int = 4,
-                  flat_max_k: int | None = None,
-                  deterministic_output: bool = False) -> DataFrame:
-    """Lloyd's k-means, ``iters`` full update rounds from a
-    deterministic seed (the ``k`` lowest-id vectors), returning each
-    vector's final cluster and exact squared distance on the quantized
-    grid.
+def _quantize(m):
+    """``floor(x · 2^20)`` — the numpy twin of :func:`quantized_vectors`
+    (float32 → float64 is exact, the scale is a power of two)."""
+    import numpy as np
+    return np.floor(m * float(KMEANS_SCALE)).astype(np.int64)
 
-    Distributed shape per iteration (all DataFrame-native, no
-    ``collect``): the centroid table is k rows → BROADCAST to the
-    assignment join; squared distance is a fold over ``zip_with``
-    (sequential array order — deterministic); argmin is
-    ``min(struct(dist, cluster_id))`` (total order, id tie-break); the
-    centroid update shuffles (cluster, dim) partial sums — k·dim
-    groups, collapsed map-side before the exchange. Component means
-    floor-quantize back to the grid (``floor(sum/n)``), keeping every
-    iteration's state integral.
 
-    Overflow budget: |component| ≤ 2 ⇒ |vq| < 2^21, squared diff
-    < 2^44, ×64 dims < 2^50 per distance; centroid partial sums stay
-    < 2^21·n — exact in BIGINT up to ~4·10^17 member vectors per
-    cluster. ``iters`` is small and fixed (plan depth grows linearly);
-    for long runs, localCheckpoint the assignment every few rounds as
-    in ``dedup.connected_components``.
+def _nearest_centroid(vq, cq):
+    """Row of each vector's nearest centroid by exact int64 squared L2,
+    and that distance. ``cq`` rows are in ascending cluster_id order
+    and argmin keeps the first minimum, so ties go to the lowest
+    cluster_id — the ``min(struct(dist, cluster_id))`` rule."""
+    import numpy as np
+    d = np.zeros((len(vq), len(cq)), dtype=np.int64)
+    for j in range(vq.shape[1]):
+        diff = vq[:, j, None] - cq[None, :, j]
+        d += diff * diff
+    best = d.argmin(axis=1)
+    return best, d[np.arange(len(vq)), best]
 
-    Assignment strategy: for ``k <= flat_max_k`` (default
-    ``KMEANS_FLAT_ASSIGN_MAX_K`` = 256) every vector scores every
-    centroid via a broadcast crossJoin — exact. Above that, the
-    crossJoin's n·k candidate rows are the scale killer (with
-    SemDeDup's k ∝ n it is O(n²/const) — VERDICT r4 #4), so
-    assignment routes through the two-level coarse quantizer
-    (``routed_candidates``): ~nprobe·√k candidates per vector,
-    approximate in the IVF sense (a vector near a cell border may
-    miss its true nearest centroid unless ``nprobe`` is raised;
-    ``nprobe >= ceil(sqrt(k))`` degenerates to the exact flat result).
-    """
-    flat_cap = (KMEANS_FLAT_ASSIGN_MAX_K
-                if flat_max_k is None else flat_max_k)
+
+def _lloyd_partials(cids, cq, vec_col: str):
+    """mapInArrow kernel of one Lloyd round: assigns every vector of the
+    partition to its nearest centroid and yields one
+    ``(cluster_id, n, Σvq)`` row per non-empty cluster. A partition
+    holding an invalid vector yields one row with a NULL cluster_id
+    whose ``s`` lists the widths seen, so the driver raises."""
+    def partials(batches):
+        import numpy as np
+        import pyarrow as pa
+        k, dim = cq.shape
+        n = np.zeros(k, dtype=np.int64)
+        s = np.zeros((k, dim), dtype=np.int64)
+        bad: set[int] = set()
+        for b in batches:
+            widths = vector_widths(b.column(vec_col))
+            if (widths != dim).any():
+                bad.update(widths.tolist())
+                continue
+            vq = _quantize(vector_matrix(b.column(vec_col), dim))
+            best, _ = _nearest_centroid(vq, cq)
+            n += np.bincount(best, minlength=k)
+            np.add.at(s, best, vq)
+        if bad:
+            rows = ([None], [0], [sorted(bad)])
+        else:
+            hit = np.flatnonzero(n)
+            rows = (cids[hit], n[hit], list(s[hit]))
+        yield pa.record_batch(
+            [pa.array(rows[0], pa.int64()), pa.array(rows[1], pa.int64()),
+             pa.array(rows[2], pa.list_(pa.int64()))],
+            names=["cluster_id", "n", "s"])
+    return partials
+
+
+def _merge_partials(a, b):
+    """treeAggregate combOp over ``{cluster_id: [n, Σvq]}`` dicts; the
+    ``None`` key collects invalid widths. Integer sums: any merge order
+    gives the same totals."""
+    if a is None or b is None:
+        return b if a is None else a
+    for cid, v in b.items():
+        if cid is None:
+            a.setdefault(None, set()).update(v)
+        elif cid in a:
+            a[cid][0] += v[0]
+            a[cid][1] += v[1]
+        else:
+            a[cid] = v
+    return a
+
+
+def _fold_partial(acc, row):
+    """treeAggregate seqOp: merge one partial row into ``acc``."""
+    import numpy as np
+    cid, n, s = row
+    part = ({None: set(s)} if cid is None
+            else {cid: [n, np.asarray(s, dtype=np.int64)]})
+    return _merge_partials(acc, part)
+
+
+def _assign_batches(cids, cq, id_col: str, vec_col: str):
+    """mapInArrow kernel of the final assignment: (id, cluster_id,
+    dist_q) per vector."""
+    def assign(batches):
+        import pyarrow as pa
+        for b in batches:
+            m = vector_matrix(b.column(vec_col), cq.shape[1])
+            best, dist = _nearest_centroid(_quantize(m), cq)
+            yield pa.record_batch(
+                [b.column(id_col), pa.array(cids[best], pa.int64()),
+                 pa.array(dist, pa.int64())],
+                names=[id_col, "cluster_id", "dist_q"])
+    return assign
+
+
+def _kmeans_flat(df: DataFrame, k: int, iters: int, id_col: str,
+                 vec_col: str) -> DataFrame:
+    """Flat Lloyd's k-means as Arrow kernels: one collect for the seeds,
+    one ``mapInArrow`` + ``treeAggregate`` job per round, and a
+    map-only final assignment in the returned plan."""
+    import numpy as np
+    from pyspark.sql import types as T
+
+    schema = T.StructType([
+        T.StructField(id_col, df.schema[id_col].dataType),
+        T.StructField("cluster_id", T.LongType()),
+        T.StructField("dist_q", T.LongType())])
+    src = df.select(id_col, vec_col)
+    seeds = src.orderBy(id_col).limit(k).collect()
+    if not seeds:
+        return df.sparkSession.createDataFrame([], schema)
+    widths = [-1 if v is None or None in v else len(v) for _, v in seeds]
+    dim = max(widths)
+    if any(w != dim for w in widths):
+        raise width_error(widths, dim)
+    cids = np.array([i for i, _ in seeds], dtype=np.int64)
+    cq = _quantize(np.array([v for _, v in seeds], dtype=np.float64))
+    for _ in range(iters):
+        acc = (src.mapInArrow(_lloyd_partials(cids, cq, vec_col),
+                              "cluster_id long, n long, s array<long>")
+                  .rdd.treeAggregate(None, _fold_partial, _merge_partials)
+               or {})
+        if None in acc:
+            raise width_error(acc[None], dim)
+        cids = np.array(sorted(acc), dtype=np.int64)
+        cq = np.array([np.floor(acc[c][1].astype(np.float64) / acc[c][0])
+                       for c in cids]).astype(np.int64)
+    return src.mapInArrow(_assign_batches(cids, cq, id_col, vec_col),
+                          schema)
+
+
+def _kmeans_routed(df: DataFrame, k: int, iters: int, id_col: str,
+                   vec_col: str, nprobe: int) -> DataFrame:
+    """Lloyd's k-means with IVF-routed assignment, all in SQL."""
     vq = quantized_vectors(df, id_col, vec_col)
     # seeds: the k LOWEST ids (not `id < k`, which silently yields
     # fewer — or zero — centroids when ids are 1-based/offset/hashed);
@@ -416,12 +525,7 @@ def kmeans_assign(df: DataFrame, k: int = 8, iters: int = 2,
                       F.col("vq").alias("cq")))
 
     def assign(cent_df: DataFrame) -> DataFrame:
-        if k <= flat_cap:
-            j = vq.crossJoin(F.broadcast(cent_df))
-            scored = j.select(F.col(id_col), "vq", "cluster_id",
-                              _sq_dist_cols("vq", "cq").alias("dist"))
-        else:
-            scored = routed_candidates(vq, cent_df, k, nprobe, id_col)
+        scored = routed_candidates(vq, cent_df, k, nprobe, id_col)
         best = (scored.groupBy(id_col)
                 .agg(F.min(F.struct("dist", "cluster_id")).alias("b"),
                      F.first("vq").alias("vq")))
@@ -441,8 +545,64 @@ def kmeans_assign(df: DataFrame, k: int = 8, iters: int = 2,
                     F.array_sort(F.collect_list(F.struct("pos", "c"))),
                     lambda s: s.getField("c")).alias("cq")))
         a = assign(cent)
-    out = a.select(F.col(id_col), F.col("cluster_id"),
-                   F.col("dist").alias("dist_q"))
+    return a.select(F.col(id_col), F.col("cluster_id"),
+                    F.col("dist").alias("dist_q"))
+
+
+def kmeans_assign(df: DataFrame, k: int = 8, iters: int = 2,
+                  id_col: str = "vec_id",
+                  vec_col: str = "embedding",
+                  nprobe: int = 4,
+                  flat_max_k: int | None = None,
+                  deterministic_output: bool = False) -> DataFrame:
+    """Lloyd's k-means, ``iters`` full update rounds from a
+    deterministic seed (the ``k`` lowest-id vectors), returning each
+    vector's final cluster and exact squared distance on the quantized
+    grid: ``(id, cluster_id, dist_q)``.
+
+    Every step is integer math on the ``floor(x · 2^20)`` grid:
+    squared distances are exact BIGINTs, argmin tie-breaks to the
+    lowest cluster_id (``min(struct(dist, cluster_id))``), and each
+    update is ``floor(Σvq::double / n)`` per component; a cluster that
+    loses every member drops out. So the result is bit-identical
+    across engines, partitionings and both assignment paths below.
+
+    Overflow budget: |component| ≤ 2 ⇒ |vq| < 2^21, squared diff
+    < 2^44, ×64 dims < 2^50 per distance; centroid partial sums stay
+    < 2^21·n — exact in BIGINT up to ~4·10^17 member vectors per
+    cluster. Components must be finite.
+
+    Flat assignment, ``k <= flat_max_k`` (default
+    ``KMEANS_FLAT_ASSIGN_MAX_K`` = 256): MLlib's Lloyd shape as Arrow
+    kernels. One ``orderBy(id).limit(k)`` collect takes the seeds, so
+    the driver holds at most cap × dim longs of centroids. Each round
+    is one job: a ``mapInArrow`` pass quantizes, scores every vector
+    against every centroid with exact int64 numpy distances and emits
+    per-partition ``(cluster_id, n, Σvq)`` partials, which
+    ``rdd.treeAggregate`` merges (the driver receives O(√partitions)
+    k-row partials, not one per partition). The returned plan is a
+    map-only ``mapInArrow`` over the input: no exchange, no join.
+    An empty input returns an empty frame with this schema; a NULL
+    vector, a NULL component or a ragged width raises ``ValueError``
+    naming the widths seen (from a round, or from the seeds; with
+    ``iters=0`` the final assignment raises it on the executor).
+
+    Routed assignment, ``k > flat_max_k``: a crossJoin's n·k candidate
+    rows are the scale killer (with SemDeDup's k ∝ n it is O(n²/const)
+    — VERDICT r4 #4), so assignment routes through the two-level
+    coarse quantizer (``routed_candidates``): ~nprobe·√k candidates per
+    vector, approximate in the IVF sense (a vector near a cell border
+    may miss its true nearest centroid unless ``nprobe`` is raised;
+    ``nprobe >= ceil(sqrt(k))`` gives exactly the flat result). This
+    path stays in SQL (``iters`` is small: plan depth grows
+    linearly).
+    """
+    flat_cap = (KMEANS_FLAT_ASSIGN_MAX_K
+                if flat_max_k is None else flat_max_k)
+    if k <= flat_cap:
+        out = _kmeans_flat(df, k, iters, id_col, vec_col)
+    else:
+        out = _kmeans_routed(df, k, iters, id_col, vec_col, nprobe)
     # VALUES are deterministic regardless; the global id sort is a
     # needless single-stage at scale for set-semantic consumers
     # (joins, the driver's order-insensitive hash) — opt in for
@@ -715,6 +875,16 @@ def ivfadc_topk(df: DataFrame, query_id: int, k: int = 10,
                .limit(k))
 
 
+def _seq_norm(m):
+    """Row norms of a float64 matrix by ``_norm``'s left-to-right fold
+    over the dimensions (vectorized over rows), bit-equal to it."""
+    import numpy as np
+    acc = np.zeros(m.shape[0])
+    for i in range(m.shape[1]):
+        acc = acc + m[:, i] * m[:, i]
+    return np.sqrt(acc)
+
+
 def _sampled_cosine_pairs(df: DataFrame, sample_mod: int,
                           id_col: str, vec_col: str,
                           label_col: str | None = None) -> DataFrame:
@@ -762,12 +932,6 @@ def _sampled_cosine_pairs(df: DataFrame, sample_mod: int,
     qlabels_arr = qp["qlabel"].to_numpy() if label_col is not None else None
     bc = df.sparkSession.sparkContext.broadcast(
         (qids_arr, q_mat, qlabels_arr))
-
-    def _seq_norm(m):
-        acc = np.zeros(m.shape[0])
-        for i in range(m.shape[1]):
-            acc = acc + m[:, i] * m[:, i]
-        return np.sqrt(acc)
 
     def sim_batches(it):
         qids, qm, qlabels = bc.value
@@ -894,6 +1058,65 @@ def knn_label_vote(df: DataFrame, k: int = 5, n_planes: int = 8,
 
 
 SEMDEDUP_TARGET_CLUSTER_ROWS = 4096
+#: lower-id rows per block of the in-cluster verify: peak memory is a
+#: few block × |cluster| arrays, 8 MB each at the 4,096-row target
+SEMDEDUP_VERIFY_BLOCK_ROWS = 256
+
+
+def _verify_cluster(id_col: str, vec_col: str, min_sim_e6: int,
+                    block: int):
+    """applyInArrow kernel of the SemDeDup verify over one (cluster,
+    code) group: ``is_kept`` = 0 iff a lower-id member's cosine, floored
+    at 1e6, reaches ``min_sim_e6``. The cosine repeats the column form's
+    FP sequence (``_dot``/``_norm`` left-to-right float64 folds, then
+    ``floor(dot / (na·nb) · 1e6)``), so every decision is bit-equal to
+    it; a zero-norm vector is dissimilar to everything."""
+    def verify(table):
+        import numpy as np
+        import pyarrow as pa
+        order = np.argsort(table.column(id_col).to_numpy(), kind="stable")
+        table = table.take(order)
+        ids = table.column(id_col).to_numpy()
+        m = vector_matrix(table.column(vec_col).combine_chunks())
+        nrm = _seq_norm(m)
+        mt = np.ascontiguousarray(m.T)
+        lost = np.zeros(len(ids), dtype=bool)
+        for lo in range(0, len(ids), block):
+            hi = min(lo + block, len(ids))
+            dot = np.zeros((hi - lo, len(ids) - lo))
+            for j in range(mt.shape[0]):
+                dot += mt[j, lo:hi, None] * mt[j, None, lo:]
+            with np.errstate(divide="ignore", invalid="ignore"):
+                e6 = np.floor(dot / (nrm[lo:hi, None] * nrm[None, lo:])
+                              * 1e6)
+            hit = ((ids[lo:hi, None] < ids[None, lo:])
+                   & (nrm[lo:hi, None] > 0) & (nrm[None, lo:] > 0)
+                   & (e6 >= min_sim_e6))
+            lost[lo:] |= hit.any(axis=0)
+        return pa.table({id_col: table.column(id_col),
+                         "cluster_id": table.column("cluster_id"),
+                         "is_kept": pa.array((~lost).astype(np.int64))})
+    return verify
+
+
+def _lsh_split_codes(df: DataFrame, bits: int, id_col: str = "vec_id",
+                     vec_col: str = "embedding") -> DataFrame:
+    """(id, __code): SemDeDup's deterministic sign-LSH sub-code on the
+    exact integer grid. Bit j = sign of Σ_i h(j,i)·vq_i with Rademacher
+    h(j,i) = 1 − 2·(((i·73856093 + j·19349663) mod 97) mod 2) — pure
+    integer arithmetic, identical on any engine, zero shuffle (map-side
+    transform/aggregate only)."""
+    code = F.lit(0).cast("long")
+    for j in range(bits):
+        def hij(i, _j=j):
+            return (F.lit(1) - 2 * F.pmod(
+                F.pmod(i * 73856093 + F.lit(_j * 19349663), 97), 2))
+        dot_j = F.aggregate(
+            F.transform("vq", lambda x, i: x * hij(i)),
+            F.lit(0).cast("long"), lambda acc, x: acc + x)
+        code = code + (dot_j >= 0).cast("long") * F.lit(1 << j)
+    return quantized_vectors(df, id_col, vec_col).select(
+        F.col(id_col), code.alias("__code"))
 
 
 def semantic_dedup(df: DataFrame, k: int | None = None, iters: int = 2,
@@ -915,85 +1138,60 @@ def semantic_dedup(df: DataFrame, k: int | None = None, iters: int = 2,
     ``is_kept`` flag (0/1 BIGINT) — callers filter or audit.
 
     100 TB shape: the cluster assignment is the exact-integer
-    ``kmeans_assign`` (broadcast centroids, deterministic); the pair
-    join is a self-join keyed on ``cluster_id``, so the quadratic term
-    is Σ|cluster|². With ``k=None`` (the default) k is derived from
-    the corpus count as ``max(8, ceil(n / target_cluster_rows))`` —
-    SemDeDup's own scaling argument — so the expected pair count is
-    Σ|cluster|² ≈ k·(n/k)² = n·target_cluster_rows: LINEAR in n, not
-    O(n²/const) as a fixed k would give (``test_scale.py`` asserts the
-    linear growth). The count is one driver-side scalar, not a data
-    collect. Skewed/oversized clusters can additionally be pre-split
-    with ``lsh_split_bits`` sign-LSH bits (deterministic integer
+    ``kmeans_assign`` (flat Arrow kernels up to
+    ``KMEANS_FLAT_ASSIGN_MAX_K`` clusters: the driver holds at most
+    cap × dim centroid longs, and each round's partial sums are merged
+    by ``treeAggregate``). The verify is one shuffle on
+    ``(cluster_id, code)`` and one ``applyInArrow`` kernel per group
+    (:func:`_verify_cluster`), so the quadratic term is Σ|cluster|².
+    The kernel takes the lower-id side in blocks of
+    ``SEMDEDUP_VERIFY_BLOCK_ROWS`` rows: peak memory is
+    O(block × |cluster|), not |cluster|². With ``k=None`` (the
+    default) k is derived from the corpus count as
+    ``max(8, ceil(n / target_cluster_rows))`` — SemDeDup's own scaling
+    argument — so the expected pair count is Σ|cluster|² ≈
+    k·(n/k)² = n·target_cluster_rows: LINEAR in n, not O(n²/const) as
+    a fixed k would give (``test_scale.py`` asserts the linear
+    growth). The count is one driver-side scalar, not a data collect.
+    Skewed/oversized clusters can additionally be pre-split with
+    ``lsh_split_bits`` sign-LSH bits (deterministic integer
     hyperplanes on the quantized grid): pairs are then required to
     share the (cluster, code) bucket, capping any single cluster's
     pair term at Σ|bucket|² at the cost of missing cross-bucket
     near-dups (SemDeDup is approximate by construction; the pruned
-    set is always a SUBSET of the unsplit one). Assignment cost:
-    for k > ``KMEANS_FLAT_ASSIGN_MAX_K`` the per-vector work is
+    set is always a SUBSET of the unsplit one). Assignment cost: for
+    k > ``KMEANS_FLAT_ASSIGN_MAX_K`` the per-vector work is
     ~``nprobe``·√k candidate rows via the two-level coarse quantizer
     (see ``kmeans_assign``/``routed_candidates``), not the O(n·k)
-    broadcast crossJoin that a corpus-proportional k would otherwise
-    make O(n²/const). Cosine is verified exactly once per surviving pair and
-    floor-quantized at 1e6 for cross-engine hashing; norms are
-    computed once per vector before the join.
+    flat scoring that a corpus-proportional k would otherwise make
+    O(n²/const). Cosine is floor-quantized at 1e6 for cross-engine
+    hashing, bit-equal to the column-expression form. An empty input
+    returns an empty frame; a NULL or ragged embedding raises
+    ``ValueError`` (see ``kmeans_assign``).
     """
+    from pyspark.sql import types as T
+
     if k is None:
         n = df.count()
         k = max(8, -(-n // target_cluster_rows))
     a = kmeans_assign(df, k=k, iters=iters, id_col=id_col,
                       vec_col=vec_col,
                       nprobe=nprobe).select(id_col, "cluster_id")
-    v = df.select(F.col(id_col), F.col(vec_col),
-                  _norm(F.col(vec_col)).alias("__nrm"))
-    m = a.join(v, id_col)
+    m = a.join(df.select(id_col, vec_col), id_col)
     if lsh_split_bits > 0:
-        # Deterministic sign-LSH sub-code on the exact integer grid:
-        # bit j = sign of Σ_i h(j,i)·vq_i with Rademacher
-        # h(j,i) = 1 − 2·(((i·73856093 + j·19349663) mod 97) mod 2) —
-        # pure integer arithmetic, identical on any engine, zero
-        # shuffle (map-side transform/aggregate only).
-        vq = quantized_vectors(df, id_col, vec_col) \
-            .select(F.col(id_col), "vq")
-        code = F.lit(0).cast("long")
-        for j in range(lsh_split_bits):
-            def hij(i, _j=j):
-                return (F.lit(1) - 2 * F.pmod(
-                    F.pmod(i * 73856093 + F.lit(_j * 19349663), 97), 2))
-            dot_j = F.aggregate(
-                F.transform("vq", lambda x, i: x * hij(i)),
-                F.lit(0).cast("long"), lambda acc, x: acc + x)
-            code = code + (dot_j >= 0).cast("long") * F.lit(1 << j)
-        m = m.join(vq.select(F.col(id_col), code.alias("__code")), id_col)
+        m = m.join(_lsh_split_codes(df, lsh_split_bits, id_col, vec_col),
+                   id_col)
     else:
         m = m.withColumn("__code", F.lit(0).cast("long"))
-    # m feeds THREE consumers (both pair-join sides + the final keeper
-    # join) — left lazy, the whole assignment pipeline (k-means iters
-    # included) re-executes once per consumer in the final job:
-    # measured 5.5 s → 2.9 s at sf0.1 with the materialization
-    m = materialize(m, "semdedup_members")
-    pair_keys = ["cluster_id", "__code"]
-    lo = m.select("cluster_id", "__code",
-                  F.col(id_col).alias("__ida"),
-                  F.col(vec_col).alias("__va"), F.col("__nrm").alias("__na"))
-    hi = m.select("cluster_id", "__code",
-                  F.col(id_col).alias("__idb"),
-                  F.col(vec_col).alias("__vb"), F.col("__nrm").alias("__nb"))
-    sim_e6 = F.floor(_dot(F.col("__va"), F.col("__vb"))
-                     / (F.col("__na") * F.col("__nb")) * 1e6).cast("long")
-    losers = (lo.join(hi, pair_keys)
-                .where(F.col("__ida") < F.col("__idb"))
-                # zero-norm vectors (failed/padding embeddings) define
-                # no cosine: treat as dissimilar instead of letting
-                # 0/0 kill the job under ANSI mode
-                .where((F.col("__na") > 0) & (F.col("__nb") > 0))
-                .where(sim_e6 >= F.lit(min_sim_e6))
-                .select(F.col("__idb").alias(id_col))
-                .distinct())
-    return (m.join(losers.withColumn("__lost", F.lit(1)), id_col, "left")
-             .select(F.col(id_col), F.col("cluster_id"),
-                     F.when(F.col("__lost").isNull(), F.lit(1))
-                      .otherwise(F.lit(0)).cast("long").alias("is_kept")))
+    schema = T.StructType([
+        T.StructField(id_col, df.schema[id_col].dataType),
+        T.StructField("cluster_id", T.LongType()),
+        T.StructField("is_kept", T.LongType())])
+    return (m.select(id_col, "cluster_id", "__code", vec_col)
+             .groupBy("cluster_id", "__code")
+             .applyInArrow(_verify_cluster(id_col, vec_col, min_sim_e6,
+                                           SEMDEDUP_VERIFY_BLOCK_ROWS),
+                           schema))
 
 
 JL_OUT_DIM = 16

@@ -405,7 +405,7 @@ def repetition_signals(df: DataFrame, text_col: str = "text",
     """
     t = tokens(text_col)
     bound = df.select(F.col(id_col), t.alias("__w"),
-                                    F.size(t).alias("__n"))
+                      F.size(t).alias("__n"))
     n = F.col("__n")
     w = F.col("__w")
     bg = F.when(n >= 2, F.zip_with(
@@ -599,8 +599,7 @@ def token_entropy(df: DataFrame, text_col: str = "text",
     nondeterministic under repartitioning).
     """
     bound = df.select(F.col(id_col),
-                                    F.array_sort(tokens(text_col))
-                                    .alias("__s"))
+                      F.array_sort(tokens(text_col)).alias("__s"))
     s, n = F.col("__s"), F.size("__s")
     # counts per distinct token: distance between successive first-
     # occurrence positions in the sorted array
@@ -664,7 +663,7 @@ def gopher_rules(df: DataFrame, text_col: str = "text",
     interpreted-HOF re-tokenization trap documented in doc_features).
     """
     bound = df.select(F.col(id_col),
-                                    tokens(text_col).alias("__w"))
+                      tokens(text_col).alias("__w"))
     t = F.col("__w")
     n_words = F.size(t)
     tot_chars = F.aggregate(t, F.lit(0), lambda acc, x: acc + F.length(x))
@@ -972,7 +971,7 @@ def pmi_bigrams(df: DataFrame, text_col: str = "text",
     difference between a vocab²-ish candidate set and a short list.
     """
     bound = df.select(F.col(id_col),
-                                    tokens(text_col).alias("__w"))
+                      tokens(text_col).alias("__w"))
     w = F.col("__w")
     # adjacent pairs w[i], w[i+1] — guarded: sequence(1, 0) would
     # DESCEND in Spark ([1, 0]), not return empty

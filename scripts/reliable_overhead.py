@@ -1,5 +1,5 @@
 """Measure the reliable-checkpoint strategy's overhead vs local on the
-graph + dedup headliners (VERDICT r6 #4: the 100 TB executor-loss story
+graph headliners (VERDICT r6 #4: the 100 TB executor-loss story
 rested on a code path no run had taken).
 
 Runs each query at $SPARK_GRAFT_SF_DIR (default sf0.1) twice per
@@ -24,7 +24,6 @@ QUERY_NAMES = [
     "triangle_count_copurchase",
     "clustering_coefficient",
     "lpa_communities_parts",
-    "semantic_dedup",
 ]
 REPS = 2
 

@@ -131,9 +131,12 @@ def test_graph_and_dedup_headliners_reliable_parity(spark, tmp_path,
     two headliner families whose 100 TB story depends on it —
     triangle_count (its materialized oriented frame feeds three
     consumers, and the test asserts the durable parquet artifact
-    exists) and semantic_dedup (runs fully under the reliable env —
-    a no-regression guard that the strategy flip can't change
-    results) — asserting result equality with the local strategy."""
+    exists) and semantic_dedup — asserting result equality with the
+    local strategy. semantic_dedup takes no checkpoint barrier any
+    more (its k-means rounds and verify are Arrow kernels and its
+    members frame has one consumer); it stays here as a no-regression
+    guard, should a barrier come back, that the strategy flip cannot
+    change its results."""
     from bigdata_project_hust_spark.operators.graph import triangle_count
     from bigdata_project_hust_spark.operators.similarity import (
         semantic_dedup)

@@ -249,16 +249,46 @@ def test_span_dedup_doc_exchange_serves_window_and_rollup(spark):
     assert n_nodes(plan, "Exchange") <= 3, plan
 
 
+def jobs_started(spark, run) -> tuple[object, int]:
+    """``run()``'s result and the number of Spark jobs it started,
+    counted by a job group of its own."""
+    import uuid
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    conv = spark._jvm.scala.jdk.javaapi.CollectionConverters
+    jobs = conv.asJava(sc._jsc.sc().statusStore().jobsList(None))
+    return out, sum(1 for j in jobs if j.jobGroup().isDefined()
+                    and j.jobGroup().get() == group)
+
+
 def test_kmeans_centroids_broadcast_every_iteration(spark):
-    """Every assignment step joins the k-row centroid table — all of
-    them must be broadcast (a sort-merge join against 8 rows would
-    shuffle the full vector table per iteration)."""
-    df = QUERIES["kmeans_clusters"].fn(spark, SF_SMOKE)
-    plan = plan_of(df)
-    assert "SortMergeJoin" not in plan, plan
-    # iters=2 → 3 assignment joins, all broadcast
-    assert n_nodes(plan, "BroadcastHashJoin") \
-        + n_nodes(plan, "BroadcastNestedLoopJoin") >= 3, plan
+    """The flat k-means holds its k-row centroid table on the driver and
+    ships it inside each round's kernel, so no round joins against it:
+    building kmeans_clusters starts exactly 1 + iters jobs (the seed
+    collect, then one mapInArrow + treeAggregate per round), and the
+    returned plan is the map-only final assignment over the scan — no
+    Exchange, no join."""
+    from bigdata_project_hust_spark.io import load_table
+    from bigdata_project_hust_spark.operators.similarity import (
+        kmeans_assign)
+    from bigdata_project_hust_spark.plans.analytics_more import (
+        _KM_ITERS, _KM_K)
+    plan = plan_of(QUERIES["kmeans_clusters"].fn(spark, SF_SMOKE))
+    assert n_nodes(plan, "Exchange") == 0, plan
+    assert "Join" not in plan and "CartesianProduct" not in plan, plan
+    assert n_nodes(plan, "MapInArrow") == 1, plan
+    # the table load starts its own schema-inference job: load first
+    emb = load_table(spark, SF_SMOKE, "embeddings")
+    _, jobs = jobs_started(
+        spark, lambda: kmeans_assign(emb, k=_KM_K, iters=_KM_ITERS))
+    assert jobs == 1 + _KM_ITERS
 
 
 def test_pagerank_reuses_invariant_exchanges(spark):
@@ -292,12 +322,40 @@ def test_gopher_rules_zero_shuffle(spark):
 
 
 def test_semantic_dedup_pair_join_not_cartesian(spark):
-    """SemDeDup's pair generation must join on cluster_id (bounded
-    Σ|cluster|²), never a cartesian; the centroid joins stay
-    broadcast exactly as in kmeans_clusters."""
+    """SemDeDup's pairs are only formed inside a (cluster_id, code)
+    group by the verify kernel (bounded Σ|cluster|²), never by a
+    cartesian product."""
     df = QUERIES["semantic_dedup"].fn(spark, SF_SMOKE)
     plan = plan_of(df)
     assert "CartesianProduct" not in plan, plan
+    assert n_nodes(plan, "FlatMapGroupsInArrow") == 1, plan
+
+
+def test_semantic_dedup_job_budget(spark, monkeypatch):
+    """One semantic_dedup build + collect starts at most 10 Spark jobs
+    (21 with the SQL k-means loop and the self-join verify) and takes
+    no checkpoint barrier: the members frame has one consumer."""
+    import sys
+
+    from bigdata_project_hust_spark import checkpoint
+
+    calls = []
+    for name in ("materialize", "materialize_counted"):
+        real = getattr(checkpoint, name)
+
+        def counting(*args, _real=real, **kwargs):
+            calls.append(args)
+            return _real(*args, **kwargs)
+        for mod in list(sys.modules.values()):
+            if (getattr(mod, "__name__", "").startswith(
+                    "bigdata_project_hust_spark")
+                    and getattr(mod, name, None) is real):
+                monkeypatch.setattr(mod, name, counting)
+    rows, jobs = jobs_started(
+        spark, lambda: QUERIES["semantic_dedup"].fn(spark, SF_SMOKE).collect())
+    assert rows
+    assert jobs <= 10, jobs
+    assert calls == []
 
 
 def test_ccnet_cutoffs_broadcast_no_global_sort(spark):

@@ -619,15 +619,19 @@ def _emb(spark, n, dim=8, seed=3):
 
 
 def test_kmeans_routed_assign_exact_when_probing_all_cells(spark):
-    # nprobe >= n_super means every centroid is scored — the routed
-    # path must reproduce the flat broadcast assignment bit-for-bit
+    # nprobe >= n_super means every centroid is scored — the routed SQL
+    # path must reproduce the flat Arrow-kernel assignment
+    # bit-for-bit: the cross-check between the two implementations of
+    # the seeds, the argmin tie-break and the centroid update
     from bigdata_project_hust_spark.operators.similarity import (
         kmeans_assign)
     df = _emb(spark, 120)
-    flat = kmeans_assign(df, k=16, iters=1)
-    routed = kmeans_assign(df, k=16, iters=1, flat_max_k=0, nprobe=99)
-    assert sorted(map(tuple, flat.collect())) == \
-        sorted(map(tuple, routed.collect()))
+    for iters in (1, 2):
+        flat = kmeans_assign(df, k=16, iters=iters)
+        routed = kmeans_assign(df, k=16, iters=iters, flat_max_k=0,
+                               nprobe=99)
+        assert sorted(map(tuple, flat.collect())) == \
+            sorted(map(tuple, routed.collect()))
 
 
 def test_kmeans_routed_assign_covers_every_vector(spark):

@@ -1435,6 +1435,172 @@ def test_semantic_dedup_prunes_higher_id_within_cluster(spark):
     assert out == {0: 1, 1: 0, 2: 1}
 
 
+def _semdedup_vectors(spark, n, dim=8, seed=11):
+    """Seeded vectors with every verify edge: zero-norm vectors (every
+    10th), exact duplicates of a lower id and near-duplicates."""
+    import random
+    rng = random.Random(seed)
+    rows = []
+    for i in range(n):
+        if i % 10 == 9:
+            v = [0.0] * dim
+        elif i % 7 == 3 and i > 3:
+            v = list(rows[i - 3][1])
+        elif i % 5 == 1:
+            v = [x + rng.uniform(-0.05, 0.05) for x in rows[i - 1][1]]
+        else:
+            v = [rng.uniform(-1, 1) for _ in range(dim)]
+        rows.append((i, v))
+    return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+
+
+def _column_form_semdedup(df, k, iters, lsh_split_bits=0):
+    """semantic_dedup's verify as the column expressions it used before
+    the Arrow kernel: a ``_dot``/``_norm`` self-join on (cluster_id,
+    __code), lower id first, zero-norm pairs dropped. Returns the
+    members and the surviving (ida, idb, sim_e6) pairs."""
+    from bigdata_project_hust_spark.operators.similarity import (
+        _dot, _lsh_split_codes, _norm, kmeans_assign)
+    a = kmeans_assign(df, k=k, iters=iters).select("vec_id", "cluster_id")
+    m = a.join(df.select("vec_id", "embedding",
+                         _norm(F.col("embedding")).alias("nrm")), "vec_id")
+    if lsh_split_bits:
+        m = m.join(_lsh_split_codes(df, lsh_split_bits), "vec_id")
+    else:
+        m = m.withColumn("__code", F.lit(0).cast("long"))
+    lo = m.select("cluster_id", "__code", F.col("vec_id").alias("ida"),
+                  F.col("embedding").alias("va"), F.col("nrm").alias("na"))
+    hi = m.select("cluster_id", "__code", F.col("vec_id").alias("idb"),
+                  F.col("embedding").alias("vb"), F.col("nrm").alias("nb"))
+    sim_e6 = F.floor(_dot(F.col("va"), F.col("vb"))
+                     / (F.col("na") * F.col("nb")) * 1e6).cast("long")
+    pairs = (lo.join(hi, ["cluster_id", "__code"])
+               .where(F.col("ida") < F.col("idb"))
+               .where((F.col("na") > 0) & (F.col("nb") > 0))
+               .select("ida", "idb", sim_e6.alias("sim_e6")))
+    return m, pairs
+
+
+def _column_form_keep(m, pairs, min_sim_e6):
+    """{vec_id: (cluster_id, is_kept)} by the old lowest-id keeper."""
+    losers = (pairs.where(F.col("sim_e6") >= F.lit(min_sim_e6))
+                   .select(F.col("idb").alias("vec_id")).distinct())
+    out = (m.join(losers.withColumn("lost", F.lit(1)), "vec_id", "left")
+            .select("vec_id", "cluster_id",
+                    F.when(F.col("lost").isNull(), 1).otherwise(0)
+                     .cast("long").alias("is_kept")))
+    return {r.vec_id: (r.cluster_id, r.is_kept) for r in out.collect()}
+
+
+def test_semantic_dedup_verify_kernel_bit_equal_to_column_form(
+        spark, monkeypatch):
+    """The Arrow verify kernel decides every member exactly as the
+    column-form self-join: at a threshold equal to a pair's sim_e6 and
+    one above it, with duplicate and zero-norm vectors, one cluster
+    larger than the kernel's row block (default and a 7-row block), and
+    with the sign-LSH sub-split."""
+    from bigdata_project_hust_spark.operators import similarity
+    emb = _semdedup_vectors(spark, 300)
+
+    def kernel(min_sim_e6, **kw):
+        out = similarity.semantic_dedup(emb, min_sim_e6=min_sim_e6, **kw)
+        return {r.vec_id: (r.cluster_id, r.is_kept) for r in out.collect()}
+
+    m, pairs = _column_form_semdedup(emb, k=1, iters=1)
+    # a member is pruned iff its best lower-id sim_e6 reaches the
+    # threshold: at t = some member's best, t and t + 1 must differ
+    levels = sorted(r[1] for r in pairs.groupBy("idb")
+                    .agg(F.max("sim_e6")).collect())
+    t = levels[len(levels) * 3 // 4]
+    at, above = _column_form_keep(m, pairs, t), _column_form_keep(
+        m, pairs, t + 1)
+    assert at != above
+    assert len(at) == 300 > similarity.SEMDEDUP_VERIFY_BLOCK_ROWS
+    assert kernel(t, k=1, iters=1) == at
+    assert kernel(t + 1, k=1, iters=1) == above
+    monkeypatch.setattr(similarity, "SEMDEDUP_VERIFY_BLOCK_ROWS", 7)
+    assert kernel(t, k=1, iters=1) == at
+    m3, pairs3 = _column_form_semdedup(emb, k=3, iters=2, lsh_split_bits=3)
+    assert kernel(t, k=3, iters=2, lsh_split_bits=3) == _column_form_keep(
+        m3, pairs3, t)
+
+
+def test_kmeans_and_semantic_dedup_partition_invariant(spark):
+    """Same rows at any input partitioning (1 or 7), shuffle partition
+    count (1, 4, 7) and AQE setting: the k-means partial sums are
+    integers (merge order is free) and the verify sorts each group by
+    id. Every value of each axis is covered, not their full product."""
+    from bigdata_project_hust_spark.operators.similarity import (
+        kmeans_assign, semantic_dedup)
+    emb = _semdedup_vectors(spark, 120)
+    conf = spark.conf
+    saved = {key: conf.get(key) for key in (
+        "spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")}
+    results = set()
+    try:
+        for aqe, parts, n_in in (("true", 4, 1), ("true", 4, 7),
+                                 ("true", 1, 7), ("true", 7, 1),
+                                 ("false", 7, 7), ("false", 1, 1)):
+            conf.set("spark.sql.adaptive.enabled", aqe)
+            conf.set("spark.sql.shuffle.partitions", str(parts))
+            df = emb.repartition(n_in)
+            km = sorted(map(tuple, kmeans_assign(df, k=4, iters=2).collect()))
+            sd = sorted(map(tuple, semantic_dedup(
+                df, k=4, iters=2, min_sim_e6=900_000).collect()))
+            results.add((tuple(km), tuple(sd)))
+    finally:
+        for key, value in saved.items():
+            conf.set(key, value)
+    assert len(results) == 1
+    (km, sd), = results
+    assert len(km) == len(sd) == 120
+    assert 0 < sum(1 for r in sd if r[2] == 0) < 120
+
+
+def test_kmeans_and_semantic_dedup_empty_input(spark):
+    """An empty input returns no rows under the declared schema."""
+    from bigdata_project_hust_spark.operators.similarity import (
+        kmeans_assign, semantic_dedup)
+    empty = spark.createDataFrame([], "vec_id long, embedding array<float>")
+    km = kmeans_assign(empty, k=4)
+    sd = semantic_dedup(empty)
+    assert km.collect() == [] and sd.collect() == []
+    assert km.schema.simpleString() == \
+        "struct<vec_id:bigint,cluster_id:bigint,dist_q:bigint>"
+    assert sd.schema.simpleString() == \
+        "struct<vec_id:bigint,cluster_id:bigint,is_kept:bigint>"
+
+
+def test_kmeans_and_semantic_dedup_ragged_embedding_raises(spark):
+    """A vector narrower than the rest raises ValueError naming the
+    widths seen, instead of the column form's NULL distance."""
+    from bigdata_project_hust_spark.operators.similarity import (
+        kmeans_assign, semantic_dedup)
+    rows = [(i, [1.0, float(i)]) for i in range(10)]
+    rows[6] = (6, [1.0])
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    with pytest.raises(ValueError, match=r"widths seen: \[1, 2\]"):
+        kmeans_assign(df, k=2)
+    with pytest.raises(ValueError, match=r"widths seen: \[1, 2\]"):
+        semantic_dedup(df, k=2)
+
+
+def test_kmeans_and_semantic_dedup_null_embedding_raises(spark):
+    """A NULL vector, or one with a NULL component, raises ValueError
+    naming the widths seen, from a round or from the seeds."""
+    from bigdata_project_hust_spark.operators.similarity import (
+        kmeans_assign, semantic_dedup)
+    rows = [(i, [1.0, float(i)]) for i in range(10)]
+    for bad in (None, [1.0, None]):
+        rows[6] = (6, bad)
+        df = spark.createDataFrame(
+            rows, "vec_id long, embedding array<double>")
+        with pytest.raises(ValueError, match=r"widths seen: \[NULL, 2\]"):
+            kmeans_assign(df, k=2)
+        with pytest.raises(ValueError, match=r"widths seen: \[NULL, 2\]"):
+            semantic_dedup(df, k=8)
+
+
 def test_ccnet_buckets_partition_and_empty_doc(spark, tmp_path):
     """Buckets partition the corpus (head+middle+tail = docs with
     tokens); a whitespace-only document gets the 'empty' bucket.
