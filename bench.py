@@ -31,9 +31,6 @@ from bigdata_project_hust_spark.plans.queries import QUERIES  # noqa: E402
 from bigdata_project_hust_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-# A/B lever for the r8 regression adjudication: "0" reproduces the old
-# clearCache-only cleanup that leaks localCheckpoint blocks session-wide
-RELEASE_BLOCKS = os.environ.get("SPARK_GRAFT_BENCH_RELEASE", "1") != "0"
 
 
 def sf_of(path: str) -> float:
@@ -72,8 +69,7 @@ def main() -> None:
     else:
         spark.read.parquet(f"{SF_DIR}/region.parquet").count()
     spark.catalog.clearCache()
-    if RELEASE_BLOCKS:
-        release_all(spark)
+    release_all(spark)
     # Best-of-N timing (default 3 — VERDICT r4 #2: a 2.9x swing on an
     # untouched query showed reps=2/min-only was too noisy to detect a
     # real 1.5x regression).  The repeats share no cache (cleared
@@ -141,8 +137,7 @@ def main() -> None:
             # a 37-query × reps session (VERDICT r8 #1 — the r8
             # driver-bench regression mechanism)
             spark.catalog.clearCache()
-            if RELEASE_BLOCKS:
-                release_all(spark)
+            release_all(spark)
         timings[name] = round(min(runs), 3)
         # statistics.median averages the two middle elements for even
         # reps (ADVICE r5: runs[len//2] was the upper-middle, biasing
@@ -168,7 +163,7 @@ def main() -> None:
         "reps": reps,
         "sf": sf_of(SF_DIR),
         "n_queries": len(timings),
-        "release_blocks": RELEASE_BLOCKS,
+        "release_blocks": True,
     }
     detail = {**summary, "warmup_failed": warmup_failed,
               "queries_median": medians,

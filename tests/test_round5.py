@@ -307,22 +307,27 @@ def test_vocab_coverage_hand_curve(spark):
 def test_engine_facade_round5_surface(spark):
     """Facade smoke for the round-5 additions."""
     from bigdata_project_hust_spark.api import Engine
+    from bigdata_project_hust_spark.operators.graph import copurchase_edges
     eng = Engine(spark, SF_SMOKE)
-    rp = eng.related_parts(k=5)
+    rp = (link_prediction(copurchase_edges(eng.table("lineitem")),
+                          max_degree=200)
+          .orderBy(F.col("cn").desc(), F.col("ra_e6").desc(), "u", "v")
+          .limit(5))
     assert set(rp.columns) == {"u", "v", "cn", "union_sz",
                                "jaccard_e6", "ra_e6"}
     assert rp.count() <= 5
-    assert "nb_pred" in eng.language_model_labels().columns
-    assert {"w1", "w2", "pmi_e6"} <= set(eng.collocations().columns)
-    assert "alarm_event_id" in eng.drift_alerts().columns
-    assert "ewma_c64" in eng.smoothed_values().columns
-    assert "autocorr_e6" in eng.value_momentum().columns
-    assert eng.hybrid_search().count() <= 10
-    assert "sum_clipped" in eng.winsorized_stats().columns
-    assert "mad_c" in eng.robust_outliers().columns
-    mw = eng.mixing_weights()
+    assert "nb_pred" in eng.query("nb_lang_classifier").columns
+    assert {"w1", "w2", "pmi_e6"} <= set(
+        eng.query("pmi_collocations").columns)
+    assert "alarm_event_id" in eng.query("cusum_drift_alerts").columns
+    assert "ewma_c64" in eng.query("ewma_recent_value").columns
+    assert "autocorr_e6" in eng.query("autocorr_lag1_user").columns
+    assert eng.query("retrieval_rrf_fusion").count() <= 10
+    assert "sum_clipped" in eng.query("winsorize_event_values").columns
+    assert "mad_c" in eng.query("mad_outlier_values").columns
+    mw = eng.query("source_temperature_mix")
     assert {"share_e6", "boost_e6"} <= set(mw.columns)
-    assert eng.vocab_curve().count() == 3
+    assert eng.query("vocab_coverage_curve").count() == 3
 
 
 def test_dynamic_partition_pruning_fires(spark, tmp_path):

@@ -579,33 +579,52 @@ def test_preprocess_projects_and_tweets_reference_semantics(spark):
 
 
 def test_engine_facade_smoke(spark):
-    """The one-import user surface: every facade method produces a
-    runnable lazy DataFrame over the fixtures."""
+    """The one-import user surface: the reference workflow (kols,
+    engagement_log) and the query catalog produce runnable lazy
+    DataFrames over the fixtures; extension operators the catalog
+    registers with other arguments are called directly."""
     from bigdata_project_hust_spark.api import Engine
+    from bigdata_project_hust_spark.operators.curation import (
+        benchmark_overlap, sequence_pack)
+    from bigdata_project_hust_spark.operators.similarity import cosine_topk
+    from bigdata_project_hust_spark.operators.text import tokens
     eng = Engine(spark, "/root/testdata/sf0.001")
     assert eng.kols().count() > 0
-    assert eng.near_duplicates("exact").columns == [
+    kols = eng.kols().select("c_custkey", "c_name", "influence_score")
+    assert (sorted(tuple(r) for r in kols.collect())
+            == sorted(tuple(r) for r in eng.query("kol_threshold").collect()))
+    log = eng.engagement_log()
+    n_users = log.select("user_id").distinct().count()
+    assert log.count() == n_users > 0
+    assert ({r.user_id for r in log.select("user_id").collect()}
+            == {r.user_id for r in eng.query("engagement_change_log")
+                .select("user_id").collect()})
+    assert eng.query("dedup_exact").columns == [
         "text_md5", "keeper_id", "n_copies"]
-    assert eng.similar(0, k=3, method="brute").count() == 3
-    assert eng.curated_corpus().columns == ["doc_id", "quality", "n_tokens"]
+    assert cosine_topk(eng.table("embeddings"), 0, 3).count() == 3
+    assert eng.query("training_corpus_curation").columns == [
+        "doc_id", "quality", "n_tokens"]
     assert len(eng.query_names()) >= 89
     assert eng.query("top5_orders").count() == 5
     # round-3 curation/layout surface
-    assert eng.pack_sequences(64).columns == [
+    nt = eng.table("documents").select(
+        F.col("doc_id"),
+        F.size(tokens("text")).cast("long").alias("n_tokens"))
+    assert sequence_pack(nt, seq_len=64).columns == [
         "doc_id", "n_tokens", "offset", "pack_id", "n_packs_spanned"]
-    assert eng.deduped_lines().columns == [
+    assert eng.query("line_dedup_clean").columns == [
         "doc_id", "n_lines", "n_removed", "clean_text"]
-    assert eng.shuffled_order().count() == eng.table("documents").count()
-    assert eng.quantized_embeddings().columns == [
+    assert (eng.query("corpus_shuffle_positions").count()
+            == eng.table("documents").count())
+    assert eng.query("embedding_quantize_int8").columns == [
         "vec_id", "scale_e9", "q_csv", "max_err_e9"]
     bench = eng.table("documents").where(F.col("doc_id") % 10 == 7)
-    assert "contaminated" in eng.decontaminate(bench).columns
-    assert eng.chunks(32, 24).count() > 0
-    assert "dsir_logratio_e6" in eng.dsir_weights(
-        F.col("doc_id") % 5 == 1).columns
-    import pytest
-    with pytest.raises(ValueError):
-        eng.near_duplicates("nope")
+    assert "contaminated" in benchmark_overlap(
+        eng.table("documents"), bench, n=13).columns
+    assert eng.query("chunk_documents").count() > 0
+    assert "dsir_logratio_e6" in eng.query("dsir_importance").columns
+    with pytest.raises(KeyError):
+        eng.query("nope")
 
 
 def test_with_ingest_ts_and_view_registration(spark):
@@ -1786,23 +1805,27 @@ def test_engine_facade_round3c_surface(spark):
     """Facade smoke for the round-3c additions: quality rules,
     semantic dedup, sketches, event flow, exact correlation."""
     from bigdata_project_hust_spark.api import Engine
+    from bigdata_project_hust_spark.operators.similarity import (
+        semantic_dedup)
+    from bigdata_project_hust_spark.operators.sketches import (
+        cms_counts, hll_sketch)
     eng = Engine(spark, "/root/testdata/sf0.001")
-    assert "passes" in eng.gopher_report().columns
-    assert eng.semantic_duplicates(k=4, iters=1).columns == [
+    assert "passes" in eng.query("gopher_quality_filter").columns
+    assert semantic_dedup(eng.table("embeddings"), k=4, iters=1,
+                          min_sim_e6=950_000).columns == [
         "vec_id", "cluster_id", "is_kept"]
-    assert "ppl_bucket" in eng.perplexity_buckets().columns
-    assert eng.bpe_merges().count() > 0
-    assert "funnel_stage" in eng.funnel().columns
-    assert "day_offset" in eng.retention().columns
-    sk = eng.distinct_sketch("orders", "o_custkey").collect()[0]
+    assert "ppl_bucket" in eng.query("ccnet_perplexity_buckets").columns
+    assert eng.query("bpe_top_merges").count() > 0
+    assert "funnel_stage" in eng.query("event_funnel").columns
+    assert "day_offset" in eng.query("retention_cohorts").columns
+    sk = hll_sketch(eng.table("orders"), "o_custkey").collect()[0]
     assert sk["n_exact"] > 0 and sk["hll_estimate"] > 0
-    cm = eng.frequency_sketch("events", "event_type")
+    cm = cms_counts(eng.table("events"), "event_type")
     assert "cms_estimate" in cm.columns
-    bl = eng.membership_filter("orders", "o_custkey",
-                               "customer", "c_custkey")
+    bl = eng.query("bloom_customer_orders")
     assert set(bl.columns) == {"key", "maybe_present"}
-    assert "corr_e6" in eng.correlation().columns
-    assert "hi_fence_c" in eng.price_outliers().columns
+    assert "corr_e6" in eng.query("pearson_qty_price").columns
+    assert "hi_fence_c" in eng.query("tukey_outlier_events").columns
 
 
 def test_hll_merge_equals_sketch_of_union_and_idempotent(spark):
@@ -2108,20 +2131,30 @@ def test_engine_facade_round4_surface(spark):
     gate, BFS, weighted sampling, LM scores, subword counts, Bloom
     pruning."""
     from bigdata_project_hust_spark.api import Engine
+    from bigdata_project_hust_spark.operators import similarity
+    from bigdata_project_hust_spark.operators.curation import (
+        priority_sample)
+    from bigdata_project_hust_spark.operators.graph import (
+        bfs_hops, supplier_customer_edges)
+    from bigdata_project_hust_spark.operators.sketches import (
+        bloom_build, bloom_prune)
     eng = Engine(spark, "/root/testdata/sf0.001")
-    assert set(eng.pq_index().columns) == {"vec_id", "m", "code",
-                                           "dist_q"}
-    assert eng.pq_search(query_id=0, k=3).count() == 3
-    assert eng.ivfpq_search(query_id=0, k=3).count() <= 3
-    rc = eng.ann_quality(k=3, sample_mod=50).collect()[0]
+    emb = eng.table("embeddings")
+    assert set(similarity.pq_encode(emb).columns) == {
+        "vec_id", "m", "code", "dist_q"}
+    assert similarity.pq_adc_topk(emb, query_id=0, k=3).count() == 3
+    assert similarity.ivf_pq_topk(emb, query_id=0, k=3).count() <= 3
+    rc = similarity.ann_recall(emb, k=3, sample_mod=50).collect()[0]
     assert rc["n_hits"] <= rc["n_exact"]
-    assert eng.hops_from_lowest(max_hops=2).count() > 0
-    ws = eng.weighted_sample(n=5)
+    edges = supplier_customer_edges(eng.table("lineitem"),
+                                    eng.table("orders"))
+    assert bfs_hops(edges, max_hops=2).count() > 0
+    ws = priority_sample(eng.table("documents"), n=5)
     assert [r["rank"] for r in ws.collect()] == [1, 2, 3, 4, 5]
-    assert "logprob_e6" in eng.lm_scores(order=2).columns
-    assert "n_pieces" in eng.subword_counts().columns
-    pruned = eng.prune_by_membership(
-        "orders", "o_orderkey", eng.table("lineitem"), "l_orderkey")
+    assert "logprob_e6" in eng.query("text_bigram_logprob").columns
+    assert "n_pieces" in eng.query("subword_piece_counts").columns
+    pruned = bloom_prune(bloom_build(eng.table("orders"), "o_orderkey"),
+                         eng.table("lineitem"), "l_orderkey")
     assert pruned.count() == eng.table("lineitem").count()  # all match
 
 
