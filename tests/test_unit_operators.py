@@ -593,12 +593,11 @@ def test_engine_facade_smoke(spark):
     kols = eng.kols().select("c_custkey", "c_name", "influence_score")
     assert (sorted(tuple(r) for r in kols.collect())
             == sorted(tuple(r) for r in eng.query("kol_threshold").collect()))
-    log = eng.engagement_log()
-    n_users = log.select("user_id").distinct().count()
-    assert log.count() == n_users > 0
-    assert ({r.user_id for r in log.select("user_id").collect()}
-            == {r.user_id for r in eng.query("engagement_change_log")
-                .select("user_id").collect()})
+    users = [r.user_id for r in
+             eng.engagement_log().select("user_id").collect()]
+    assert users and len(users) == len(set(users))  # one row per user
+    assert set(users) == {r.user_id for r in eng.query(
+        "engagement_change_log").select("user_id").collect()}
     assert eng.query("dedup_exact").columns == [
         "text_md5", "keeper_id", "n_copies"]
     assert cosine_topk(eng.table("embeddings"), 0, 3).count() == 3
