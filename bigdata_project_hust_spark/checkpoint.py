@@ -57,6 +57,7 @@ import itertools
 import os
 import threading
 import weakref
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -159,6 +160,19 @@ def _run_dir(spark: SparkSession, base: str) -> str:
     return f"{base.rstrip('/')}/{spark.sparkContext.applicationId}"
 
 
+@contextmanager
+def _described(df: DataFrame, label: str):
+    """Name the jobs started in the block after ``label`` (their
+    ``spark.job.description``), then restore the caller's value."""
+    sc = df.sparkSession.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(label)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.job.description", prev)
+
+
 def _resolve_strategy(strategy: str | None, prefer: str) -> str:
     """Explicit ``strategy`` > ``SPARK_GRAFT_CHECKPOINT_STRATEGY`` >
     the call site's ``prefer``.  The env var accepts only
@@ -217,31 +231,32 @@ def materialize(df: DataFrame, label: str = "intermediate",
     that passed ``fill=False``.
     """
     strategy = _resolve_strategy(strategy, prefer)
-    if strategy == "cache":
-        from pyspark import StorageLevel
-        # always eager unless the caller owns the fill: a lazily-
-        # persisted frame loses the cache-fill race between concurrent
-        # consumers (ADVICE r7), so `eager` is meaningful only for the
-        # local strategy.
-        out = df.persist(StorageLevel.MEMORY_AND_DISK)
-        if fill:
-            out.count()  # fill the cache BEFORE any consumer sees it
-        return _track("cache", out)
-    if strategy == "local":
-        return _track("local", df.localCheckpoint(eager=eager))
-    if strategy != "reliable":
-        raise ValueError(
-            f"unknown checkpoint strategy {strategy!r} "
-            "(expected 'cache', 'local' or 'reliable')")
-    base = path or os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR")
-    if not base:
-        raise ValueError(
-            "reliable checkpoint strategy needs a directory: pass "
-            "path= or set SPARK_GRAFT_CHECKPOINT_DIR")
-    run_dir = _run_dir(df.sparkSession, base)
-    dest = f"{run_dir}/{label}_{next(_COUNTER)}.parquet"
-    df.write.mode("overwrite").parquet(dest)
-    return df.sparkSession.read.parquet(dest)
+    with _described(df, label):
+        if strategy == "cache":
+            from pyspark import StorageLevel
+            # always eager unless the caller owns the fill: a lazily-
+            # persisted frame loses the cache-fill race between concurrent
+            # consumers (ADVICE r7), so `eager` is meaningful only for the
+            # local strategy.
+            out = df.persist(StorageLevel.MEMORY_AND_DISK)
+            if fill:
+                out.count()  # fill the cache BEFORE any consumer sees it
+            return _track("cache", out)
+        if strategy == "local":
+            return _track("local", df.localCheckpoint(eager=eager))
+        if strategy != "reliable":
+            raise ValueError(
+                f"unknown checkpoint strategy {strategy!r} "
+                "(expected 'cache', 'local' or 'reliable')")
+        base = path or os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR")
+        if not base:
+            raise ValueError(
+                "reliable checkpoint strategy needs a directory: pass "
+                "path= or set SPARK_GRAFT_CHECKPOINT_DIR")
+        run_dir = _run_dir(df.sparkSession, base)
+        dest = f"{run_dir}/{label}_{next(_COUNTER)}.parquet"
+        df.write.mode("overwrite").parquet(dest)
+        return df.sparkSession.read.parquet(dest)
 
 
 def materialize_counted(df: DataFrame, label: str = "intermediate",
@@ -265,17 +280,18 @@ def materialize_counted(df: DataFrame, label: str = "intermediate",
       (metadata-only job, no row reads).
     """
     strategy = _resolve_strategy(strategy, prefer)
-    if strategy == "cache":
-        from pyspark import StorageLevel
-        out = df.persist(StorageLevel.MEMORY_AND_DISK)
-        n = out.count()  # the cache fill, value kept
-        return _track("cache", out), n
-    if strategy == "local":
-        out = df.localCheckpoint(eager=False)
-        n = out.count()  # first action: computes AND pins the blocks
-        return _track("local", out), n
-    out = materialize(df, label, strategy, path)
-    return out, out.count()
+    with _described(df, label):
+        if strategy == "cache":
+            from pyspark import StorageLevel
+            out = df.persist(StorageLevel.MEMORY_AND_DISK)
+            n = out.count()  # the cache fill, value kept
+            return _track("cache", out), n
+        if strategy == "local":
+            out = df.localCheckpoint(eager=False)
+            n = out.count()  # first action: computes AND pins the blocks
+            return _track("local", out), n
+        out = materialize(df, label, strategy, path)
+        return out, out.count()
 
 
 def clear_checkpoints(spark: SparkSession,

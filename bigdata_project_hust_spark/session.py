@@ -25,6 +25,8 @@ def get_spark(app_name: str = "bigdata_project_hust_spark",
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
+    package_parent = os.path.dirname(
+        os.path.dirname(os.path.abspath(__file__)))
     builder = (
         SparkSession.builder
         .master(f"local[{cpus}]")
@@ -58,6 +60,13 @@ def get_spark(app_name: str = "bigdata_project_hust_spark",
         # exactly-once stream-start retry in plans/round23.py, which
         # also protects the driver's own vanilla session.
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        # Python workers fork from a daemon that stops re-parsing
+        # pyspark.zip on every task (see worker_daemon.py); the
+        # package's parent goes on the workers' path so the daemon
+        # imports from any working directory.
+        .config("spark.python.daemon.module",
+                "bigdata_project_hust_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", package_parent)
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

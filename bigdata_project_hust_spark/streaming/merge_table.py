@@ -33,10 +33,12 @@ the expr may reference ``t_<col>`` (target) and ``s_<col>`` (source),
 e.g. ``{"cnt": "t_cnt + s_cnt"}`` for the $inc merge;
 ``when_not_matched`` = ``"insert"`` or ``"ignore"``.
 
-The source is read once per merge: it is cached, and one aggregation
-over it both fills the cache and returns the NULL-key count and the
-touched bucket ids (metadata-scale, <= n_buckets values). The buckets
-a merge empties are observed on the write job itself.
+The source is read once per merge: it is cached, and one map-only
+pass fills the cache while observing the NULL-key count and the
+touched bucket ids (metadata-scale, <= n_buckets values); the source's
+duplicate keys are dropped inside the write plan. The buckets a merge
+empties are observed on the write job itself. The manifest carries
+the segments' schema, so reading the target starts no footer job.
 
 Caveats shared with Delta: a uniformly-hashed source touching
 >> n_buckets keys rewrites most buckets; clustering the key space
@@ -56,6 +58,7 @@ import os
 import shutil
 
 from pyspark.sql import DataFrame, Observation, functions as F
+from pyspark.sql.types import StructType
 
 from ..functions.scalar import stable_hash64
 
@@ -145,20 +148,21 @@ class MergeIntoParquetTable:
         if not ptr:
             return None
         pairs = ", ".join(f"{b}, {v}" for b, v in ptr.items())
-        return (self.spark.read.parquet(
-            *[self._seg_path(v) for v in sorted(set(ptr.values()))])
-            .where(f"__v = element_at(map({pairs}), __bucket)")
-            .drop("__bucket", "__v"))
+        segments = [self._seg_path(v) for v in sorted(set(ptr.values()))]
+        return (self.spark.read.schema(StructType.fromJson(st["schema"]))
+                .parquet(*segments)
+                .where(f"__v = element_at(map({pairs}), __bucket)")
+                .drop("__bucket", "__v"))
 
     # -- commit protocol ------------------------------------------------
-    def _commit(self, st: dict, new_buckets: dict[str, int],
+    def _commit(self, st: dict, new_buckets: dict[str, int], schema: dict,
                 epoch_id: int | None) -> None:
         merged = {**st["buckets"], **new_buckets}
         # buckets whose merged content is empty are dropped entirely
         merged = {b: v for b, v in merged.items() if v >= 0}
         epochs = st["epochs"] + ([epoch_id] if epoch_id is not None else [])
         state = {"version": st["version"] + 1, "buckets": merged,
-                 "epochs": epochs}
+                 "epochs": epochs, "schema": schema}
         # the versioned manifest (time-travel history) lands first;
         # the atomic pointer swap is still the single commit point
         vpath = os.path.join(self.path,
@@ -207,19 +211,21 @@ class MergeIntoParquetTable:
         return removed
 
     def _write_touched(self, out: DataFrame, touched: list[int],
-                       new_v: int) -> dict[str, int]:
+                       new_v: int) -> tuple[dict[str, int], dict]:
         """Write the merged rows of the touched buckets as segment
-        ``new_v`` in ONE plain parquet write. Buckets with zero
-        surviving rows map to -1 (deleted); the write job itself
-        observes which buckets it wrote."""
+        ``new_v`` in ONE plain parquet write, and return the new bucket
+        pointers and the segment's schema. Buckets with zero surviving
+        rows map to -1 (deleted); the write job itself observes which
+        buckets it wrote."""
         seen = Observation()
-        (out.withColumn("__bucket", self._bucket_col())
-            .withColumn("__v", F.lit(new_v))
-            .sortWithinPartitions("__bucket")
+        seg = (out.withColumn("__bucket", self._bucket_col())
+               .withColumn("__v", F.lit(new_v)))
+        (seg.sortWithinPartitions("__bucket")
             .observe(seen, F.collect_set("__bucket").alias("b"))
             .write.mode("overwrite").parquet(self._seg_path(new_v)))
         written = set(seen.get["b"])
-        return {str(b): new_v if b in written else -1 for b in touched}
+        return ({str(b): new_v if b in written else -1 for b in touched},
+                seg.schema.jsonValue())
 
     # -- MERGE ----------------------------------------------------------
     def merge(self, source: DataFrame,
@@ -229,15 +235,18 @@ class MergeIntoParquetTable:
         st = self._state()
         if epoch_id is not None and epoch_id in st["epochs"]:
             return
-        # the source is read ONCE: cached, and the one aggregation
-        # below fills the cache while returning the NULL-key count and
-        # the DISTINCT touched bucket ids (metadata-scale)
-        cached = (source.dropDuplicates([self.key])
-                  .withColumn("__bucket", self._bucket_col()).persist())
+        # the source is read ONCE: cached, and one map-only pass fills
+        # the cache while observing the NULL-key count and the DISTINCT
+        # touched bucket ids (metadata-scale)
+        cached = source.withColumn("__bucket", self._bucket_col()).persist()
         try:
-            n_null, touched = cached.agg(
-                F.count_if(F.col(self.key).isNull()),
-                F.sort_array(F.collect_set("__bucket"))).first()
+            stats = Observation()
+            (cached.observe(
+                stats,
+                F.count_if(F.col(self.key).isNull()).alias("n_null"),
+                F.sort_array(F.collect_set("__bucket")).alias("touched"))
+                .write.format("noop").mode("overwrite").save())
+            n_null, touched = stats.get["n_null"], stats.get["touched"]
             # NULL merge keys are rejected up front: stable_hash64(NULL)
             # is NULL, so a null key has no bucket and could never match
             # in the full_outer merge — surfacing it beats dropping it.
@@ -246,7 +255,7 @@ class MergeIntoParquetTable:
                     f"merge source contains NULL '{self.key}' rows; "
                     "filter them out (a NULL key has no bucket and can "
                     "never match a target row)")
-            src = cached.drop("__bucket")
+            src = cached.drop("__bucket").dropDuplicates([self.key])
             tgt = self._read_buckets(st, touched)
             if tgt is None:
                 out = src if when_not_matched == "insert" else \
@@ -254,9 +263,9 @@ class MergeIntoParquetTable:
             else:
                 out = self._merge_frames(tgt, src, when_matched,
                                          when_not_matched)
-            new_buckets = self._write_touched(out, touched,
-                                              st["version"] + 1)
-            self._commit(st, new_buckets, epoch_id)
+            new_buckets, schema = self._write_touched(out, touched,
+                                                      st["version"] + 1)
+            self._commit(st, new_buckets, schema, epoch_id)
         finally:
             cached.unpersist()
 
@@ -311,8 +320,9 @@ class MergeIntoParquetTable:
         # in one task, so each bucket lands in one output file
         df = (self._read_buckets(st, to_compact)
               .repartition(max_files_per_bucket, self._bucket_col()))
-        new_buckets = self._write_touched(df, to_compact, st["version"] + 1)
-        self._commit(st, new_buckets, None)
+        new_buckets, schema = self._write_touched(df, to_compact,
+                                                  st["version"] + 1)
+        self._commit(st, new_buckets, schema, None)
 
     def vacuum(self) -> int:
         """Remove orphaned (superseded / crashed-write) segments not

@@ -256,3 +256,32 @@ def test_tracked_list_compacts_without_release(spark):
         assert any(e[1]() is keep for e in live)
     finally:
         cp.release_all(spark)
+
+
+def test_barriers_name_their_jobs(spark):
+    """Every materialize/materialize_counted barrier names the jobs it
+    starts after its label (``spark.job.description`` in the status
+    store) and restores the caller's description afterwards."""
+    import uuid
+
+    from bigdata_project_hust_spark.checkpoint import materialize_counted
+
+    tag = uuid.uuid4().hex
+    sc = spark.sparkContext
+    sc.setJobDescription(f"outer_{tag}")
+    try:
+        materialize(spark.range(10), f"cache_{tag}").unpersist()
+        _, n = materialize_counted(spark.range(11), f"local_{tag}",
+                                   strategy="local")
+        assert n == 11
+        assert sc.getLocalProperty("spark.job.description") == f"outer_{tag}"
+        spark.range(12).count()
+    finally:
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    conv = spark._jvm.scala.jdk.javaapi.CollectionConverters
+    names = [j.description().get()
+             for j in conv.asJava(sc._jsc.sc().statusStore().jobsList(None))
+             if j.description().isDefined()
+             and j.description().get().endswith(tag)]
+    assert set(names) == {f"cache_{tag}", f"local_{tag}", f"outer_{tag}"}

@@ -242,6 +242,19 @@ def test_change_feed_between_versions(spark, tmp_path):
     assert feed12 == {1: "U", 4: "I"}
 
 
+def test_snapshot_read_starts_no_job(spark, tmp_path):
+    """The manifest carries the segments' schema, so building a snapshot
+    read infers nothing from parquet footers: it starts no Spark job."""
+    from .test_plans import jobs_started
+
+    t = _mk(spark, tmp_path, [(1, 10, "a"), (2, 20, "b")])
+    t.merge(spark.createDataFrame([(3, 30, "c")], "k long, v long, s string"))
+    df, jobs = jobs_started(spark, t.read)
+    assert jobs == 0
+    assert df.schema.simpleString() == "struct<k:bigint,v:bigint,s:string>"
+    assert _rows(t) == {1: (10, "a"), 2: (20, "b"), 3: (30, "c")}
+
+
 def test_merge_rejects_null_key_rows(spark, tmp_path):
     # ADVICE r4: a NULL merge key used to crash the distinct-bucket
     # sort with TypeError (stable_hash64(NULL) is NULL); it now fails
