@@ -192,8 +192,7 @@ def materialize(df: DataFrame, label: str = "intermediate",
                 strategy: str | None = None,
                 path: str | None = None,
                 eager: bool = True,
-                prefer: str = "cache",
-                fill: bool = True) -> DataFrame:
+                prefer: str = "cache") -> DataFrame:
     """Cut ``df``'s lineage and return a frame whose consumers all read
     the materialized result instead of re-running the subtree.
 
@@ -216,31 +215,16 @@ def materialize(df: DataFrame, label: str = "intermediate",
     ``persist`` does not cut the LOGICAL plan and planning itself
     OOMs), so a global flip back onto ``cache`` would silently break
     them — it is rejected loudly instead (ADVICE r7).
-
-    ``fill=False`` (``cache`` strategy only) skips the eager
-    ``count()`` that fills the cache, so the frame comes back persisted
-    but EMPTY.  The caller then owes the fill: its next action on the
-    frame must be one full, single-consumer pass (e.g.
-    ``triangle_count``'s stats agg, which doubles as fill + count — one
-    job instead of two), run before any other consumer — a
-    ``limit``/``first`` or two concurrent branches would race the
-    unfilled cache, the failure this strategy exists to prevent.
-    Under a resolved ``local`` or ``reliable`` strategy ``fill`` is
-    ignored (``local`` follows ``eager``; ``reliable`` always writes
-    first), including when the env var forces them over a call site
-    that passed ``fill=False``.
     """
     strategy = _resolve_strategy(strategy, prefer)
     with _described(df, label):
         if strategy == "cache":
             from pyspark import StorageLevel
-            # always eager unless the caller owns the fill: a lazily-
-            # persisted frame loses the cache-fill race between concurrent
-            # consumers (ADVICE r7), so `eager` is meaningful only for the
-            # local strategy.
+            # always eager: a lazily-persisted frame loses the cache-fill
+            # race between concurrent consumers (ADVICE r7), so `eager`
+            # is meaningful only for the local strategy.
             out = df.persist(StorageLevel.MEMORY_AND_DISK)
-            if fill:
-                out.count()  # fill the cache BEFORE any consumer sees it
+            out.count()  # fill the cache BEFORE any consumer sees it
             return _track("cache", out)
         if strategy == "local":
             return _track("local", df.localCheckpoint(eager=eager))

@@ -32,6 +32,7 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame, functions as F
 
 from ..checkpoint import materialize
+from ..worker_daemon import install as install_worker_daemon
 
 EMB_DIM = 64
 
@@ -82,6 +83,7 @@ def embedding_norms(df: DataFrame, dim: int = EMB_DIM) -> DataFrame:
     def batches(it: Iterator) -> Iterator:
         import numpy as np
         import pyarrow as pa
+        install_worker_daemon()
         for b in it:
             ids = b.column(b.schema.get_field_index("vec_id"))
             m = vector_matrix(
@@ -115,6 +117,7 @@ def label_centroids(df: DataFrame, dim: int = EMB_DIM) -> DataFrame:
     def per_group(table):
         import numpy as np
         import pyarrow as pa
+        install_worker_daemon()
         label = table.column("label")[0].as_py()
         col = table.column("embedding").combine_chunks()
         m = vector_matrix(col, dim)

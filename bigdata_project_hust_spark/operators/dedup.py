@@ -23,13 +23,13 @@ from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from ..checkpoint import materialize, materialize_counted
 from ..functions.scalar import stable_hash64
+from ..worker_daemon import install as install_worker_daemon
 from .text import tokens
 
 MINHASH_K = 16          # signature length
 MINHASH_BANDS = 4       # 4 bands × 4 rows
 SIMHASH_BITS = 60       # stable_hash64 yields 60 usable bits
 SIMHASH_BAND_BITS = 12  # 5 bands of 12 bits
-CC_BROADCAST_MAX_EDGES = 4_000_000  # label-table broadcast gate (CC)
 # Shingle-count gate for staging the MinHash signature table (see
 # minhash_near_duplicates): the barrier loses at sf0.1 and wins past
 # ~1M shingles.
@@ -304,198 +304,163 @@ def minhash_near_duplicates(df: DataFrame, text_col: str = "text",
     return jaccard_verify(cands, sh, id_col, threshold_num, threshold_den)
 
 
-def connected_components(pairs: DataFrame, src: str = "doc_a",
-                         dst: str = "doc_b",
-                         max_iter: int = 25,
-                         checkpoint_every: int = 5) -> DataFrame:
-    """Duplicate-cluster formation: connected components over the
-    near-dup pair graph via min-label propagation — the step between
-    pair detection (minhash/simhash/ngram) and keeper selection (one
-    representative per cluster). Output: (node, component) where
-    component = the minimum node id reachable from the node.
+def endpoint_type(df: DataFrame, a: str, b: str):
+    """Spark type of the union of columns ``a`` and ``b`` — the type a
+    node id keeps in a graph operator's output."""
+    return (df.select(F.col(a).alias("n"))
+            .unionAll(df.select(F.col(b).alias("n"))).schema["n"].dataType)
 
-    Iterative distributed algorithm (the one genuinely non-single-pass
-    op in the engine): each round, every node takes the min of its own
-    label and its neighbors' labels (one join + hash-agg); converges in
-    ≤ diameter rounds. Near-dup graphs are clique-ish (a shared band
-    bucket links all members pairwise), so the measured round count is
-    2-3; a pointer-doubling shortcut (label ← label's label) was tried
-    and REJECTED — it halves rounds on long chains but doubles the
-    joins per round, a net 2× loss on real (low-diameter) dup graphs.
 
-    Per round there is exactly ONE job: the convergence flag
-    (sum of changed-bits) rides the persist-materializing count as an
-    ``observe`` metric instead of a separate join-and-count pass.
+def _local_stars(batches):
+    """mapInArrow kernel: union-find over one partition's edges, yielding
+    (u, v, part) per node u — v the least id connected to u by this
+    partition's edges, ``part`` the partition id. Each pass
+    hooks every edge's greater root onto its lesser one, then pointer
+    jumping flattens the trees; a pass removes at least one root."""
+    import numpy as np
+    import pyarrow as pa
+    from pyspark import TaskContext
 
-    Lineage is TRUNCATED every ``checkpoint_every`` rounds via an
-    eager ``localCheckpoint`` (reads from the already-persisted cache
-    — cheap): persist alone caches DATA but keeps the full logical
-    plan, and a long-diameter graph (a path) nests one join+agg per
-    round until optimizer/tree-string passes overflow the driver heap
-    around ~15 rounds. Dup graphs converge in 2-3 rounds, so the
-    common path never checkpoints; a reliability-grade (HDFS)
-    checkpoint would replace localCheckpoint on a real cluster where
-    executor loss must be survivable.
-    """
-    from pyspark.sql import Observation
-
-    e = pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    # Eager localCheckpoint (not just persist) on the base tables:
-    # persist caches DATA but every round's plan still EMBEDS the full
-    # upstream pair-generation plan (a fuzzy join's deletion lattice can
-    # be thousands of tree nodes), and k rounds nest k copies of it —
-    # plan stringification alone then overflows a default-sized (1g)
-    # driver heap.  Truncating here makes each round's plan O(rounds
-    # since last checkpoint), independent of the upstream plan.
-    edges, n_sym = materialize_counted(
-        e.unionByName(e.select(F.col("b").alias("a"),
-                               F.col("a").alias("b"))).distinct(),
-        "cc_edges", prefer="local")
-    labels = (edges.select(F.col("a").alias("node")).distinct()
-                   .select("node", F.col("node").alias("component"))
-                   .persist())
-    # |V| ≤ symmetric edge count, so under the gate the label table is
-    # broadcast into the per-round join and the edge frame is never
-    # shuffled — the same lever as lpa_communities (measured there:
-    # 10.2 s → 5 s at sf0.1); bigger graphs keep the shuffle join.
-    bcast = n_sym <= CC_BROADCAST_MAX_EDGES
-    for i in range(max_iter):
-        lab = F.broadcast(labels) if bcast else labels
-        nbr = (edges.join(lab, edges["b"] == lab["node"])
-                    .groupBy("a")
-                    .agg(F.min("component").alias("nbr_comp")))
-        if bcast:
-            nbr = F.broadcast(nbr)
-        new_comp = F.least(labels["component"],
-                           F.coalesce(F.col("nbr_comp"),
-                                      labels["component"]))
-        obs = Observation(f"cc_round_{i}")
-        new_labels = (labels.join(nbr, labels["node"] == nbr["a"], "left")
-                            .select(labels["node"],
-                                    new_comp.alias("component"),
-                                    (new_comp != labels["component"])
-                                    .cast("long").alias("__chg"))
-                            .observe(obs, F.sum("__chg").alias("n_changed"))
-                            .drop("__chg")
-                            .persist())
-        new_labels.count()  # materializes the round AND the metric
-        labels.unpersist()
-        labels = new_labels
-        if (i + 1) % checkpoint_every == 0:
-            # truncate lineage from the cached data, then drop the cache
-            labels = materialize(new_labels, "cc_labels",
-                                  prefer="local")
-            new_labels.unpersist()
-        if (obs.get["n_changed"] or 0) == 0:
+    install_worker_daemon()
+    batches = list(batches)
+    if not batches:
+        return
+    edges = pa.Table.from_batches(batches)
+    nodes, inv = np.unique(np.concatenate(
+        [edges.column(0).to_numpy(), edges.column(1).to_numpy()]),
+        return_inverse=True)
+    a, b = inv[:edges.num_rows], inv[edges.num_rows:]
+    label = np.arange(len(nodes))  # dense ids keep the order of node ids
+    while True:
+        ra, rb = label[a], label[b]
+        split = ra != rb
+        if not split.any():
             break
-    edges.unpersist()
-    return labels
+        np.minimum.at(label, np.maximum(ra[split], rb[split]),
+                      np.minimum(ra[split], rb[split]))
+        while True:
+            up = label[label]
+            if (up == label).all():
+                break
+            label = up
+    part = np.full(len(nodes), TaskContext.get().partitionId(),
+                   dtype=np.int64)
+    yield pa.record_batch(
+        [pa.array(nodes), pa.array(nodes[label]), pa.array(part)],
+        names=["u", "v", "part"])
 
 
-def connected_components_twophase(pairs: DataFrame, src: str = "doc_a",
-                                  dst: str = "doc_b",
-                                  max_iter: int = 16,
-                                  stats: dict | None = None) -> DataFrame:
-    """Connected components via alternating large-star / small-star
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC 2014) — the bounded-rounds alternative to min-label
-    propagation for HIGH-DIAMETER graphs.
+def _edge_signature(edges: DataFrame) -> tuple:
+    """(count, bit_xor of xxhash64(u, v)) over the rows u != v, then the
+    least and greatest ``part`` if there is one: one aggregate, which is
+    also the pass that pins a lazy local-checkpoint barrier."""
+    edge = F.col("u") != F.col("v")
+    return tuple(edges.agg(
+        F.count_if(edge), F.bit_xor(F.when(edge, F.xxhash64("u", "v"))),
+        *[f("part") for f in (F.min, F.max) if "part" in edges.columns])
+        .first())
 
-    :func:`connected_components` converges in O(diameter) rounds — the
-    right choice for clique-ish near-dup graphs (diameter 2-3), but at
-    100 TB the dup-pair graph can chain documents into long paths
-    (A≈B≈C≈… under a loose threshold), and a diameter-d path costs d
-    shuffle rounds there. Star contraction converges in O(log² n)
-    rounds worst-case (O(log n) observed) REGARDLESS of diameter:
 
-    - **large-star** (per node u): point every neighbor v > u at
-      m = min(Γ(u) ∪ {u});
-    - **small-star** (per node u, over edges directed larger→smaller):
-      point u and its smaller neighbors at their collective min.
+def connected_components(pairs: DataFrame, src: str = "doc_a",
+                         dst: str = "doc_b", max_iter: int = 16,
+                         stats: dict | None = None) -> DataFrame:
+    """Connected components of the pair graph: (node, component), where
+    component is the least node id reachable from the node — duplicate
+    clusters between pair detection and keeper selection. Every id in
+    a pair is a node (a self-pair makes a singleton); pairs with a NULL
+    end are dropped; ids keep their type. Two phases:
 
-    Each star is one symmetric-edge groupBy + one re-join + one edge
-    distinct — three shuffles keyed on node/edge per half-round; edge
-    count never grows beyond the symmetric input (the distinct is what
-    bounds it — multiple donors emit the same (v, min) edge), and
-    every value strictly decreases toward the component min, so the
-    fixpoint is the star graph (member → component-min). Output
-    matches :func:`connected_components` exactly: (node, component).
-    Per-round cost is higher than one min-propagation round; the win
-    is ROUND COUNT — pick this variant when the pair graph can be
-    long-chained (loose thresholds, transitive near-dup text), the
-    propagation loop when it is clique-ish (diameter 2-3).
+    - **Partition-local union-find**: one ``mapInArrow`` pass
+      (:func:`_local_stars`) over the distinct edge frame labels each
+      partition's nodes with their least id connected inside that
+      partition. When every label comes from one partition (a small
+      graph after AQE coalescing) they ARE the components and no
+      further Spark job runs.
+    - **Star contraction** (Kiveris et al., "Connected Components in
+      MapReduce and Beyond", SoCC 2014) over those stars otherwise:
+      alternating large-star (point every neighbour v > u at
+      min(Γ(u) ∪ {u})) and small-star (point u and its smaller
+      neighbours at their collective min), O(log² n) rounds whatever
+      the diameter — a 200-node path takes ≤ 12, where min-label
+      propagation takes ~200.
 
-    Convergence detection: the (distinct) edge set is compared across
-    rounds by (count, bit_xor of xxhash64(u,v)) — one tiny agg per
-    round riding the materialize, no extra join, no overflow under
-    ANSI mode. Parent values are monotonically non-increasing under
-    both stars, so a stable (count, xor) pair at the fixpoint is the
-    designed terminal state; a collision masking a real change would
-    need two distinct edge sets with equal count AND equal 64-bit
-    xor-folds mid-descent (~2^-64 per round).
+    Convergence: each round's distinct output edges are compared with
+    its input by (count, bit_xor of xxhash64(u, v)), computed by the
+    aggregate that pins the round's barrier (no extra job); the first
+    round compares against the stars' signature, taken the same way.
+    Labels only decrease, so an unchanged signature is the fixpoint
+    (a masking collision is ~2^-64 per round). No fixpoint after
+    ``max_iter`` rounds raises ``RuntimeError``. Each round's frame is
+    a ``prefer="local"`` checkpoint: the previous one feeds a round ~4×,
+    so an untruncated logical tree grows 4^rounds; ``release_all``
+    frees superseded rounds at the query boundary.
 
-    Lineage: every round's edge frame is materialized with
-    ``prefer="local"`` — the previous round's frame feeds the new plan
-    ~4× (sym's two branches, small-star's two), so the logical tree is
-    4^rounds without truncation (the class of plan that OOMs the
-    driver, see :func:`connected_components`'s checkpoint note). The
-    per-round ``unpersist`` drops superseded CACHE entries only;
-    localCheckpoint blocks of superseded rounds are freed at the query
-    boundary by ``checkpoint.release_all`` (bench.py / driver_sim do
-    this per query) — bounded here by the ≤ max_iter round count.
-
-    ``stats``: pass a dict to receive ``{"rounds": r}`` — the bounded-
-    rounds property is an assertable contract, not a comment
-    (tests pin rounds ≪ diameter on a long path).
+    ``stats``: pass a dict to receive ``{"rounds": r}`` (0 when the
+    local pass was exact).
     """
+    node_type = endpoint_type(pairs, src, dst)
     e = (pairs.select(F.col(src).cast("long").alias("u"),
                       F.col(dst).cast("long").alias("v"))
-              .where(F.col("u") != F.col("v"))
-              .distinct())
-    edges = materialize(e, "cc2_edges", prefer="local")
-    prev_sig = None
+              .dropna().distinct())
+    # prefer="local": a local checkpoint plans the frame as its own
+    # query, so AQE may coalesce the distinct's output (a cached plan
+    # keeps its partitioning); its lazy fill is the signature agg
+    stars = materialize(
+        e.mapInArrow(_local_stars, "u long, v long, part long"),
+        "cc_stars", prefer="local", eager=False)
+    n, h, lo_part, hi_part = _edge_signature(stars)
     rounds = 0
-    for rounds in range(1, max_iter + 1):
-        # ---- large-star: key on BOTH endpoints (symmetric view) ----
-        sym = edges.unionByName(
-            edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        mins = (sym.groupBy("u")
-                   .agg(F.min("v").alias("nbr_min"))
-                   .select("u", F.least("u", "nbr_min").alias("m")))
-        large = (sym.join(mins, "u")
-                    .where(F.col("v") > F.col("u"))
-                    .select(F.col("v").alias("u"), F.col("m").alias("v"))
-                    .where(F.col("u") != F.col("v"))
-                    .distinct())
-        # ---- small-star: direct edges larger→smaller, key on larger --
-        d = large.select(F.greatest("u", "v").alias("u"),
-                         F.least("u", "v").alias("v"))
-        smins = d.groupBy("u").agg(F.min("v").alias("m"))
-        small = (d.join(smins, "u")
-                  .select(F.col("v").alias("u"), F.col("m").alias("v"))
-                  .unionByName(smins.select("u", F.col("m").alias("v")))
-                  .where(F.col("u") != F.col("v"))
-                  .distinct())
-        new_edges = materialize(small, "cc2_round", prefer="local")
-        edges.unpersist()
-        edges = new_edges
-        sig = edges.agg(
-            F.count("*").alias("n"),
-            F.bit_xor(F.xxhash64("u", "v")).alias("h")).first()
-        if (sig["n"], sig["h"]) == prev_sig:
-            break
-        prev_sig = (sig["n"], sig["h"])
+    if lo_part == hi_part:  # one partition, or no edges at all
+        out = stars.select(F.col("u").alias("node"),
+                           F.col("v").alias("component"))
+    else:
+        edges = stars.where(F.col("u") != F.col("v")).select("u", "v")
+        prev_sig = (n, h)
+        for rounds in range(1, max_iter + 1):
+            # ---- large-star: key on BOTH endpoints (symmetric view) --
+            sym = edges.unionByName(
+                edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
+            mins = (sym.groupBy("u")
+                       .agg(F.min("v").alias("nbr_min"))
+                       .select("u", F.least("u", "nbr_min").alias("m")))
+            large = (sym.join(mins, "u")
+                        .where(F.col("v") > F.col("u"))
+                        .select(F.col("v").alias("u"), F.col("m").alias("v"))
+                        .where(F.col("u") != F.col("v"))
+                        .distinct())
+            # ---- small-star: direct edges larger→smaller, key on larger
+            d = large.select(F.greatest("u", "v").alias("u"),
+                             F.least("u", "v").alias("v"))
+            smins = d.groupBy("u").agg(F.min("v").alias("m"))
+            small = (d.join(smins, "u")
+                      .select(F.col("v").alias("u"), F.col("m").alias("v"))
+                      .unionByName(smins.select("u", F.col("m").alias("v")))
+                      .where(F.col("u") != F.col("v"))
+                      .distinct())
+            edges = materialize(small, "cc_round", prefer="local",
+                                eager=False)
+            sig = _edge_signature(edges)
+            if sig == prev_sig:
+                break
+            prev_sig = sig
+        else:
+            raise RuntimeError(
+                f"connected components did not converge in {max_iter} "
+                "star-contraction rounds")
+        # fixpoint edges are (member → component-min) stars; every
+        # node's own id joins the min so roots and singletons keep it
+        out = (edges.select(F.col("u").alias("node"),
+                            F.col("v").alias("component"))
+               .unionByName(stars.select(F.col("u").alias("node"),
+                                         F.col("u").alias("component")))
+               .groupBy("node").agg(F.min("component").alias("component")))
     if stats is not None:
         stats["rounds"] = rounds
-    # fixpoint edges are (member → component-min) stars; roots appear
-    # only on the v side, so union them back with self-labels
-    members = edges.select(F.col("u").alias("node"),
-                           F.col("v").alias("component"))
-    roots = edges.select(F.col("v").alias("node"),
-                         F.col("v").alias("component")).distinct()
-    return (members.unionByName(roots)
-                   .groupBy("node").agg(F.min("component")
-                                        .alias("component")))
+    return out.select(F.col("node").cast(node_type).alias("node"),
+                      F.col("component").cast(node_type).alias("component"))
+
+
+connected_components_twophase = connected_components
 
 
 def duplicate_cluster_keepers(pairs: DataFrame, src: str = "doc_a",

@@ -31,6 +31,8 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from ..worker_daemon import install as install_worker_daemon
+
 FEATURE_DIM = 8
 
 DECODED_SCHEMA = ("asset_id long, kind string, n_bytes long, "
@@ -123,6 +125,7 @@ def extract_audio_features(df: DataFrame) -> DataFrame:
     Arrow-batched, zero driver involvement."""
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        install_worker_daemon()
         for pdf in it:
             rows = []
             for asset_id, payload in zip(pdf["asset_id"], pdf["payload"]):
@@ -189,6 +192,7 @@ def extract_audio_stats(df: DataFrame) -> DataFrame:
                 absdiff, flips)
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        install_worker_daemon()
         for pdf in it:
             rows = []
             for asset_id, payload in zip(pdf["asset_id"], pdf["payload"]):
@@ -227,6 +231,7 @@ def extract_features(df: DataFrame, *, fake: bool = False) -> DataFrame:
             return None
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        install_worker_daemon()
         for pdf in it:
             payloads = pdf["payload"]
             feat = (payloads.map(lambda b: _fake_features(b or b""))
@@ -261,6 +266,7 @@ def extract_pixel_stats(df: DataFrame) -> DataFrame:
     import numpy as np
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        install_worker_daemon()
         for pdf in it:
             rows = []
             for asset_id, payload in zip(pdf["asset_id"], pdf["payload"]):
@@ -308,6 +314,7 @@ def resize_images(df: DataFrame, width: int = 32,
     """
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        install_worker_daemon()
         for pdf in it:
             thumbs = pdf["payload"].map(
                 lambda b: (b or b"")[:RESIZE_THUMB_BYTES])
@@ -332,6 +339,7 @@ def sample_frames(df: DataFrame, every_n: int = 2) -> DataFrame:
     1→N mapInPandas expansion shape a real ffmpeg-backed sampler uses."""
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        install_worker_daemon()
         for pdf in it:
             rows = []
             for _, r in pdf.iterrows():
@@ -588,6 +596,7 @@ def extract_image_features(df: DataFrame) -> DataFrame:
     isolation (ok=false rows) and narrow Arrow-batched execution."""
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        install_worker_daemon()
         for pdf in it:
             rows = []
             for asset_id, payload in zip(pdf["asset_id"], pdf["payload"]):
@@ -621,6 +630,7 @@ def resize_rasters(df: DataFrame, width: int = 32,
         raise ValueError(f"unknown thumb encoding {encode!r}")
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        install_worker_daemon()
         for pdf in it:
             rows = []
             for asset_id, payload in zip(pdf["asset_id"], pdf["payload"]):

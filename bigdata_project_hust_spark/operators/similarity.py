@@ -32,6 +32,7 @@ import math
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ..worker_daemon import install as install_worker_daemon
 from .arrowops import vector_matrix, vector_widths, width_error
 
 
@@ -411,6 +412,7 @@ def _lloyd_partials(cids, cq, vec_col: str):
     def partials(batches):
         import numpy as np
         import pyarrow as pa
+        install_worker_daemon()
         k, dim = cq.shape
         n = np.zeros(k, dtype=np.int64)
         s = np.zeros((k, dim), dtype=np.int64)
@@ -467,6 +469,7 @@ def _assign_batches(cids, cq, id_col: str, vec_col: str):
     dist_q) per vector."""
     def assign(batches):
         import pyarrow as pa
+        install_worker_daemon()
         for b in batches:
             m = vector_matrix(b.column(vec_col), cq.shape[1])
             best, dist = _nearest_centroid(_quantize(m), cq)
@@ -934,6 +937,7 @@ def _sampled_cosine_pairs(df: DataFrame, sample_mod: int,
         (qids_arr, q_mat, qlabels_arr))
 
     def sim_batches(it):
+        install_worker_daemon()
         qids, qm, qlabels = bc.value
         qn = _seq_norm(qm)
         for pdf in it:
@@ -1074,6 +1078,7 @@ def _verify_cluster(id_col: str, vec_col: str, min_sim_e6: int,
     def verify(table):
         import numpy as np
         import pyarrow as pa
+        install_worker_daemon()
         order = np.argsort(table.column(id_col).to_numpy(), kind="stable")
         table = table.take(order)
         ids = table.column(id_col).to_numpy()
@@ -1278,6 +1283,7 @@ def top_principal_component(df: DataFrame, dim: int = 64, iters: int = 6,
 
     def gram_batches(it):
         import numpy as np
+        install_worker_daemon()
         for pdf in it:
             if not len(pdf):
                 continue

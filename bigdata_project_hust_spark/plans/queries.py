@@ -719,10 +719,11 @@ def _minhash_graph_sql() -> str:
 
 
 def q_dedup_components(spark, sf_dir):
-    """Duplicate clusters: connected components (iterative min-label
-    propagation) over the MinHash near-dup pair graph. The oracle
-    computes the same reachability-min via a DuckDB recursive CTE —
-    a full value-hash check on an iterative distributed algorithm."""
+    """Duplicate clusters: connected components (partition-local
+    union-find, then star contraction) over the MinHash near-dup pair
+    graph. The oracle computes the same reachability-min via a DuckDB
+    recursive CTE — a full value-hash check on an iterative
+    distributed algorithm."""
     pairs = dedup.minhash_near_duplicates(_t(spark, sf_dir, "documents"))
     return dedup.connected_components(pairs).select(
         F.col("node").alias("doc_id"), "component")

@@ -2,15 +2,14 @@
 gaps VERDICT r9 #5 named.
 
 * ``dedup_components_twophase`` — connected components over the MinHash
-  near-dup pair graph via alternating large-star/small-star contraction
-  (Kiveris et al., SoCC 2014): O(log² n) shuffle rounds regardless of
-  graph diameter, vs the O(diameter) min-label propagation of
-  ``dedup_components``. At 100 TB the CC loop is the dedup pipeline's
-  depth bottleneck — a loose threshold chains documents into long
-  paths, and each extra diameter unit is a full shuffle round for the
-  propagation loop but only a log factor here. Oracle: the SAME
-  recursive-CTE reachability-min as ``dedup_components`` — two
-  independent algorithms, one ground truth.
+  near-dup pair graph: a partition-local union-find, then alternating
+  large-star/small-star contraction (Kiveris et al., SoCC 2014) over
+  what it left: O(log² n) shuffle rounds regardless of graph diameter.
+  At 100 TB the CC loop is the dedup pipeline's depth bottleneck — a
+  loose threshold chains documents into long paths. It runs the same
+  kernel as ``dedup_components`` (``dedup.connected_components``) and
+  keeps its own registry name as the curation benchmark's CC job.
+  Oracle: the same recursive-CTE reachability-min.
 * ``multimodal_curation_stream`` — the streaming twin of the
   ``multimodal_curation`` headliner: the same decode → quality-gate →
   perceptual-fingerprint stages running as ``foreachBatch`` over an
@@ -45,11 +44,11 @@ QUERIES_ROUND23: dict[str, QuerySpec] = {}
 
 
 def q_dedup_components_twophase(spark, sf_dir):
-    """Bounded-rounds duplicate clusters: large-star/small-star CC
-    (dedup.connected_components_twophase) over the MinHash pair graph.
-    Same output contract and oracle as dedup_components."""
+    """Bounded-rounds duplicate clusters (dedup.connected_components)
+    over the MinHash pair graph. Same output contract and oracle as
+    dedup_components."""
     pairs = dedup.minhash_near_duplicates(_t(spark, sf_dir, "documents"))
-    return dedup.connected_components_twophase(pairs).select(
+    return dedup.connected_components(pairs).select(
         F.col("node").alias("doc_id"), "component")
 
 
@@ -202,9 +201,10 @@ QUERIES_ROUND23.update({
     "dedup_components_twophase": QuerySpec(
         q_dedup_components_twophase, _oracle_components(),
         headline=True,
-        doc="duplicate clusters via alternating large-star/small-star "
-            "contraction (O(log n) rounds, diameter-independent); same "
-            "recursive-CTE oracle as dedup_components"),
+        doc="duplicate clusters via partition-local union-find, then "
+            "large-star/small-star contraction (O(log n) rounds, "
+            "diameter-independent); same recursive-CTE oracle as "
+            "dedup_components"),
     "multimodal_curation_stream": QuerySpec(
         q_multimodal_curation_stream, ORACLE_MM_CURATION,
         doc="streaming twin of the multimodal curation headliner: "

@@ -1054,16 +1054,13 @@ QUERIES_ROUND4.update({
 
 def q_entity_resolution_customers(spark, sf_dir):
     """End-to-end entity resolution over customer names: ed≤1 fuzzy
-    pairs (deletion-neighborhood blocking) → min-label connected
+    pairs (deletion-neighborhood blocking) → connected
     components → every customer with its canonical entity id (the
     cluster minimum; singletons resolve to themselves). The standard
     dedupe-the-CRM pipeline as one declarative plan."""
     from ..operators.dedup import connected_components, fuzzy_join_ed1
     cust = _t(spark, sf_dir, "customer")
     pairs = fuzzy_join_ed1(cust, "c_name", "c_custkey")
-    # plain min-propagation CC: the ed≤1 digit lattice is DENSE (many
-    # neighbors per name), so labels span it in few rounds — measured
-    # 11.4 s vs 16.2 s for a pointer-jumping variant at sf0.01
     comp = connected_components(pairs, "id_a", "id_b")
     return (cust.select("c_custkey")
                 .join(comp.withColumnRenamed("node", "c_custkey"),

@@ -248,9 +248,8 @@ def q_leakage_safe_split(spark, sf_dir):
     component), so every near-dup pair lands in the same split and
     cross-split contamination is zero BY CONSTRUCTION (asserted in
     test_round8). Output: per-split census (docs + distinct
-    components). Scale shape: LSH pair pipeline + hash-min label
-    propagation (both bucketed), then a zero-shuffle hash of the
-    component id."""
+    components). Scale shape: LSH pair pipeline + connected components
+    (both bucketed), then a zero-shuffle hash of the component id."""
     d = _t(spark, sf_dir, "documents")
     pairs = dedup.minhash_near_duplicates(d)
     comp = dedup.connected_components(pairs).withColumnRenamed(

@@ -10,7 +10,8 @@ re-read lazy (gh-103200). Here an archive is re-read only when its
 
 ``session.get_spark`` names this module in ``spark.python.daemon.module``;
 the daemon installs the check and then runs ``pyspark.daemon.manager()``,
-so every worker it forks inherits it.
+so every worker it forks inherits it. In other sessions the operators'
+Python kernels call :func:`install` in the worker, for its later tasks.
 """
 
 from __future__ import annotations

@@ -106,17 +106,20 @@ def test_clear_checkpoints_removes_only_this_run(spark, tmp_path,
 
 
 def test_operator_through_reliable_path(spark, tmp_path, monkeypatch):
-    """An end-to-end operator (clustering coefficient: edge frame +
-    degree frame both materialized) produces identical results under
-    the reliable strategy."""
-    from bigdata_project_hust_spark.operators.graph import (
-        clustering_coefficient)
+    """An end-to-end operator (clustering coefficient past the triangle
+    broadcast gate: edge frame + degree frame both materialized)
+    produces the broadcast kernel's results under the reliable
+    strategy."""
+    from bigdata_project_hust_spark.operators import graph
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (1, 3), (3, 4)], "pa long, pb long")
-    local = {r.node: tuple(r) for r in clustering_coefficient(edges).collect()}
+    local = {r.node: tuple(r)
+             for r in graph.clustering_coefficient(edges).collect()}
+    monkeypatch.setattr(graph, "TRIANGLE_BROADCAST_MAX_EDGES", 0)
     monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_STRATEGY", "reliable")
     monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", str(tmp_path))
-    rel = {r.node: tuple(r) for r in clustering_coefficient(edges).collect()}
+    rel = {r.node: tuple(r)
+           for r in graph.clustering_coefficient(edges).collect()}
     assert rel == local
     assert local[1] == (1, 2, 1, 1_000_000)  # in the triangle: cc = 1
     assert local[4] == (4, 1, 0, 0)          # pendant: degree < 2 → 0
@@ -129,14 +132,16 @@ def test_graph_and_dedup_headliners_reliable_parity(spark, tmp_path,
                                                     monkeypatch):
     """VERDICT r6 #4: the reliable strategy exercised END-TO-END on the
     two headliner families whose 100 TB story depends on it —
-    triangle_count (its materialized oriented frame feeds three
-    consumers, and the test asserts the durable parquet artifact
-    exists) and semantic_dedup — asserting result equality with the
-    local strategy. semantic_dedup takes no checkpoint barrier any
+    triangle_count past its broadcast gate (the materialized oriented
+    frame feeds the adjacency build and the edge-side join, and the
+    test asserts the durable parquet artifact exists) and
+    semantic_dedup — asserting result equality with the local
+    strategy. semantic_dedup takes no checkpoint barrier any
     more (its k-means rounds and verify are Arrow kernels and its
     members frame has one consumer); it stays here as a no-regression
     guard, should a barrier come back, that the strategy flip cannot
     change its results."""
+    from bigdata_project_hust_spark.operators import graph
     from bigdata_project_hust_spark.operators.graph import triangle_count
     from bigdata_project_hust_spark.operators.similarity import (
         semantic_dedup)
@@ -148,6 +153,7 @@ def test_graph_and_dedup_headliners_reliable_parity(spark, tmp_path,
         "vec_id long, embedding array<double>")
     tri_local = sorted(map(tuple, triangle_count(edges).collect()))
     sd_local = sorted(map(tuple, semantic_dedup(vecs, k=4).collect()))
+    monkeypatch.setattr(graph, "TRIANGLE_BROADCAST_MAX_EDGES", 0)
     monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_STRATEGY", "reliable")
     monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", str(tmp_path))
     assert sorted(map(tuple, triangle_count(edges).collect())) == tri_local

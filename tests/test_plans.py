@@ -358,6 +358,21 @@ def test_semantic_dedup_job_budget(spark, monkeypatch):
     assert calls == []
 
 
+def test_graph_kernels_job_budget(spark):
+    """The curation benchmark's two graph jobs, built and collected at
+    SF_SMOKE: clustering_coefficient is one edge fetch plus one kernel
+    pass (at most 6 Spark jobs; 20 with the wedge-join plan), and the
+    one-partition dup graph's connected components end after the
+    partition-local union-find (at most 10; 31 with two
+    star-contraction rounds and their signature jobs)."""
+    for name, budget in (("clustering_coefficient", 6),
+                         ("dedup_components_twophase", 10)):
+        rows, jobs = jobs_started(
+            spark, lambda: QUERIES[name].fn(spark, SF_SMOKE).collect())
+        assert rows, name
+        assert jobs <= budget, (name, jobs)
+
+
 def test_ccnet_cutoffs_broadcast_no_global_sort(spark):
     """The quartile cutoffs are a 1-row aggregate broadcast over the
     corpus — a global Sort (or a single-partition window Exchange)
@@ -509,22 +524,19 @@ def test_boilerplate_two_level_agg_on_hash_keys(spark):
     assert n_nodes(plan, "SortMergeJoin") <= 1, plan  # totals⋈boiler only
 
 
-def test_clustering_coefficient_single_degree_agg(spark, monkeypatch):
-    """VERDICT r5 #4: degrees are aggregated ONCE (node_degrees,
-    materialized, then shared by the triangle orientation and the cc
-    denominator) — the final plan must contain NO endpoint-Union
-    degree aggregate (both consumers scan the materialized frame) and
-    no trailing global sort (output is unordered by default).
-
-    Pinned under the `local` strategy: a cached InMemoryTableScan
-    PRINTS its whole build subtree at every reference, so operator
-    string-counts over the default cache strategy's plan text count
-    already-built lineage, not work the final job performs."""
-    monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_STRATEGY", "local")
+def test_clustering_coefficient_single_degree_agg(spark):
+    """VERDICT r5 #4: degrees are computed ONCE — by the triangle
+    kernel, next to each node's count — so the final plan is one
+    MapInArrow over the task range plus one node-keyed agg: no
+    endpoint-Union degree aggregate, no join, no cartesian product and
+    no trailing global sort (output is unordered by default)."""
     df = QUERIES["clustering_coefficient"].fn(spark, SF_SMOKE)
     plan = plan_of(df)
+    assert n_nodes(plan, "MapInArrow") == 1, plan
     assert n_nodes(plan, "Union") == 0, plan
-    assert "Scan ExistingRDD" in plan, plan
+    assert n_nodes(plan, "HashAggregate") == 2, plan  # partial + final
+    assert "Join" not in plan, plan
+    assert "CartesianProduct" not in plan, plan
     assert n_nodes(plan, "TakeOrderedAndProject") == 0, plan
 
 
@@ -559,22 +571,16 @@ def test_lpa_broadcasts_labels_no_edge_shuffle(spark, monkeypatch):
     assert n_nodes(p2, "SortMergeJoin") == 0, p2
 
 
-def test_triangle_closure_probe_packed_broadcast(spark, monkeypatch):
-    """The triangle closure probe joins on ONE packed BIGINT key
-    ((u << 32) | v — 'shiftleft' must appear in the plan); no
-    cartesian products anywhere; at most two join nodes total (the
-    wedge self-join + the broadcast closure probe — the planner may
-    render the wedge join broadcast or sort-merge depending on the
-    materialized frame's size stats; both are the documented O(Σd²)
-    generate-and-probe, and AQE re-picks from runtime sizes at
-    scale)."""
-    monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_STRATEGY", "local")
+def test_triangle_closure_probe_packed_broadcast(spark):
+    """The triangle closure probe runs inside ONE MapInArrow kernel:
+    each task probes its wedges' packed rank keys (u·n + v) against
+    the broadcast CSR's sorted edge keys, so the plan holds no join at
+    all — no wedge self-join, no closure-probe join, no cartesian
+    product — and degrees are computed once, in the driver's CSR build
+    (no endpoint-Union agg)."""
     df = QUERIES["triangle_count_copurchase"].fn(spark, SF_SMOKE)
     plan = plan_of(df)
-    assert "shiftleft" in plan, plan
-    n_joins = (n_nodes(plan, "BroadcastHashJoin")
-               + n_nodes(plan, "SortMergeJoin")
-               + n_nodes(plan, "ShuffledHashJoin"))
-    assert n_joins == 2, plan
-    assert n_nodes(plan, "SortMergeJoin") <= 1, plan
+    assert n_nodes(plan, "MapInArrow") == 1, plan
+    assert "Join" not in plan, plan
     assert "CartesianProduct" not in plan, plan
+    assert n_nodes(plan, "Union") == 0, plan

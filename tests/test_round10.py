@@ -1,5 +1,6 @@
-"""Round-10 operators: alternating large-star/small-star connected
-components (Kiveris et al.) and the streaming multimodal-curation twin."""
+"""Round-10 operators: two-phase connected components (partition-local
+union-find, then Kiveris et al.'s large-star/small-star contraction) and
+the streaming multimodal-curation twin."""
 
 from __future__ import annotations
 
@@ -8,16 +9,34 @@ import random
 from pyspark.sql import functions as F
 
 from bigdata_project_hust_spark.operators.dedup import (
-    connected_components, connected_components_twophase)
+    connected_components_twophase)
 
 
 def _cc_of(df):
     return {(r["node"], r["component"]) for r in df.collect()}
 
 
+def union_find_components(pairs) -> set:
+    """Pure-Python reference: (node, least id of its component)."""
+    parent: dict = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {(x, find(x)) for x in parent}
+
+
 def test_twophase_matches_min_propagation_random(spark):
-    """Both algorithms must produce identical (node, component-min)
-    labelings on a random graph with several components."""
+    """The (node, component-min) labeling equals a pure-Python
+    union-find's on a random graph with several components."""
     rng = random.Random(10)
     edges = set()
     # three blocks of 40 nodes with random intra-block edges
@@ -28,9 +47,8 @@ def test_twophase_matches_min_propagation_random(spark):
             edges.add((a, b))
     pairs = spark.createDataFrame(
         [(a, b) for a, b in edges], "doc_a long, doc_b long")
-    ref = _cc_of(connected_components(pairs))
     got = _cc_of(connected_components_twophase(pairs))
-    assert got == ref
+    assert got == union_find_components(edges)
 
 
 def test_twophase_bounded_rounds_on_long_path(spark):

@@ -1155,6 +1155,89 @@ def test_triangle_count_int_typed_edges(spark):
     assert out == {1: 3, 2: 3, 3: 3, 4: 3}
 
 
+def _degree_triangles(edges) -> dict:
+    """Pure-Python reference: node -> (degree, triangles) of a distinct
+    undirected edge list."""
+    adj: dict = {}
+    for a, b in edges:
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
+    tri = dict.fromkeys(adj, 0)
+    for a, b in edges:
+        for w in adj[a] & adj[b]:
+            tri[w] += 1  # once per triangle: at the edge opposite w
+    return {n: (len(adj[n]), tri[n]) for n in adj}
+
+
+def test_graph_kernels_partition_invariant(spark, monkeypatch):
+    """Connected components, triangle counts and clustering
+    coefficients equal pure-Python references at any input
+    partitioning (1 or 7), shuffle partition count (1, 4, 7) and AQE
+    setting, and with the triangle broadcast gate forced to 0 (the
+    adjacency-intersection path). Every value of each axis is covered,
+    not their full product. With AQE off and 7 shuffle partitions the
+    CC edge frame spans several partitions, so star contraction must
+    run there, in at most 12 rounds even on the 200-node path."""
+    import random
+
+    from bigdata_project_hust_spark.operators import graph
+    from bigdata_project_hust_spark.operators.dedup import (
+        connected_components)
+
+    from .test_round10 import union_find_components
+
+    rng = random.Random(9)
+    blocks = set()
+    for base in (0, 100, 200):
+        for _ in range(80):
+            a, b = sorted(rng.sample(range(base, base + 40), 2))
+            blocks.add((a, b))
+    k4 = [(a, b) for a in range(1, 5) for b in range(a + 1, 5)]
+    graphs = {"blocks": sorted(blocks),
+              "path": [(i, i + 1) for i in range(199)],
+              "k4_square": k4 + [(10, 11), (11, 12), (12, 13), (10, 13)]}
+    frames = {g: spark.createDataFrame(e, "pa long, pb long")
+              for g, e in graphs.items()}
+    want = {}
+    for g, e in graphs.items():
+        ref = _degree_triangles(e)
+        want[g] = (union_find_components(e),
+                   {n: t for n, (_, t) in ref.items() if t},
+                   {n: (d, t, 2 * t * 1_000_000 // (d * (d - 1))
+                        if d >= 2 else 0) for n, (d, t) in ref.items()})
+    conf = spark.conf
+    saved = {key: conf.get(key) for key in (
+        "spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")}
+    gate = graph.TRIANGLE_BROADCAST_MAX_EDGES
+    rounds = []
+    try:
+        for aqe, parts, n_in, tri_gate in (
+                ("true", 4, 1, gate), ("true", 4, 7, gate),
+                ("true", 1, 7, gate), ("true", 7, 1, 0),
+                ("false", 7, 7, gate), ("false", 1, 1, gate)):
+            conf.set("spark.sql.adaptive.enabled", aqe)
+            conf.set("spark.sql.shuffle.partitions", str(parts))
+            monkeypatch.setattr(graph, "TRIANGLE_BROADCAST_MAX_EDGES",
+                                tri_gate)
+            for g, frame in frames.items():
+                df = frame.repartition(n_in)
+                stats: dict = {}
+                got = (
+                    {(r.node, r.component) for r in connected_components(
+                        df, "pa", "pb", stats=stats).collect()},
+                    {r.node: r.n_triangles
+                     for r in graph.triangle_count(df).collect()},
+                    {r.node: (r.degree, r.n_triangles, r.cc_e6)
+                     for r in graph.clustering_coefficient(df).collect()})
+                assert got == want[g], (aqe, parts, n_in, tri_gate, g)
+                rounds.append(stats["rounds"])
+    finally:
+        for key, value in saved.items():
+            conf.set(key, value)
+    assert max(rounds) > 0, rounds
+    assert max(rounds) <= 12, rounds
+
+
 def _png_encode(px, filters, alpha=False):
     """Minimal PNG encoder for tests: per-row FORWARD filtering with a
     chosen filter type per scanline (exercises every decoder branch)."""

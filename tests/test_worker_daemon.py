@@ -95,3 +95,46 @@ def test_daemon_imports_from_any_working_directory():
                          capture_output=True, text=True, timeout=300)
     assert out.returncode == 0, out.stderr[-2000:]
     assert out.stdout.strip().splitlines()[-1] == "[2, 3]"
+
+
+@needs_lazy_fix
+def test_engine_kernels_install_the_fix_in_a_vanilla_session():
+    """A session the engine did not build (no
+    ``spark.python.daemon.module``, like the external driver's) still
+    gets the fix: an engine kernel installs it in the worker it runs
+    in, so that worker's later Arrow tasks run under it. One core, so
+    every Arrow task reuses the one idle worker."""
+    script = textwrap.dedent(f"""
+        import sys
+        sys.path.insert(0, {ROOT!r})
+        from pyspark.sql import SparkSession
+        from bigdata_project_hust_spark.operators.dedup import (
+            connected_components)
+
+        def owner(batches):
+            import zipimport
+            import pyarrow as pa
+            for _ in batches:
+                pass
+            yield pa.record_batch([pa.array(
+                [zipimport.zipimporter.invalidate_caches.__module__])],
+                names=["m"])
+
+        spark = (SparkSession.builder.master("local[1]")
+                 .config("spark.ui.enabled", "false").getOrCreate())
+        assert not spark.conf.get("spark.python.daemon.module", None)
+        probe = spark.range(0, 1, 1, 1).mapInArrow(owner, "m string")
+        before = probe.first().m
+        pairs = spark.createDataFrame([(1, 2), (2, 3)],
+                                      "doc_a long, doc_b long")
+        connected_components(pairs).collect()
+        print(before, probe.first().m)
+        spark.stop()
+    """)
+    env = dict(os.environ, PYTHONPATH=ROOT)
+    out = subprocess.run([sys.executable, "-c", script], env=env,
+                         capture_output=True, text=True, timeout=300)
+    assert out.returncode == 0, out.stderr[-2000:]
+    before, after = out.stdout.strip().splitlines()[-1].split()
+    assert before == "zipimport"
+    assert after == worker_daemon.__name__
